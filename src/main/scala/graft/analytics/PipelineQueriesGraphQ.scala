@@ -248,11 +248,13 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
         // bytes. Gate: explicit via packIds (the spec hook), else
         // measured off the MEMOIZED degree frame only (the q177
         // gate-count rule — raw calls keep the 2-col shape, action-free).
-        // Packing is bijective on ids < 2³¹, so the semi-join matches
-        // exactly the same pairs.
+        // Packing is bijective on ids in [0, 2³¹), so the semi-join
+        // matches exactly the same pairs; a negative id would let
+        // (b, c) and (b-1, c+2³¹) share a key, so both bounds are checked
+        // (one aggregate, one job).
         val pack = packIds.getOrElse(memoEdges.isDefined && {
-          val mx = deg.agg(max(col("node"))).head()
-          !mx.isNullAt(0) && mx.getLong(0) < (1L << 31)
+          val r = deg.agg(min(col("node")), max(col("node"))).head()
+          !r.isNullAt(0) && r.getLong(0) >= 0L && r.getLong(1) < (1L << 31)
         })
         val wedges0 = oriented.alias("x")
           .join(oriented.alias("y"),

@@ -1457,9 +1457,9 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         p
       })
 
-  private[graft] def epochScheduleOf(docs: DataFrame,
-      memoShards: DataFrame => DataFrame = identity,
-      memoPerEpoch: DataFrame => DataFrame = identity): DataFrame = {
+  private[graft] def epochScheduleOf(docs: => DataFrame,
+      memoShards: (=> DataFrame) => DataFrame = d => d,
+      memoPerEpoch: (=> DataFrame) => DataFrame = d => d): DataFrame = {
     import graft.functions.PortableHashFunctions.md5_token_hashes
     import graft.operators.GlobalRank.rowNumber
     // r13 optimization (guide §2.4): PERSIST the shard frame — it feeds
@@ -1469,7 +1469,10 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     // 2·EpochCount times per invocation. Same for the per-epoch union:
     // the adjacency self-join and the displacement join consume it four
     // times. Both frames are corpus/EpochShardDocs-sized; both memoized
-    // via the wrapper hooks (r14).
+    // via the wrapper hooks (r14). The hooks, and `docs`, are BY NAME:
+    // each rowNumber below runs Spark jobs and persists a sharding while
+    // the plan is built, and resolving a parquet `docs` runs a schema
+    // job, so a memo hit must not build its argument at all.
     val shards = memoShards(docs
       .groupBy(col("source"), expr(s"doc_id div $EpochShardDocs").as("shard_no"))
       .agg(count(lit(1)).as("n_docs")))

@@ -59,24 +59,6 @@ object Dedup {
   def bandKeysOf(shingles: Column, p: MinHashParams = MinHashParams()): Column =
     minhash_band_keys(shingles, p.bands, p.rowsPerBand, p.seed)
 
-  /** Candidate pairs via band-bucket equi-join: explode (band_idx, band_key),
-    * self-join on the bucket, distinct the pair. The join key is compact
-    * (int, long) — this is the single large shuffle of the pipeline. */
-  def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
-      p: MinHashParams = MinHashParams()): DataFrame = {
-    val banded = docs
-      .select(
-        col(idCol).as("id"),
-        bandKeysOf(array_distinct(TextAnalysis.tokens(col(textCol))), p).as("bands"))
-      .select(col("id"), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-    val l = banded.select(col("band_idx"), col("band_key"), col("id").as("id_a"))
-    val r = banded.select(col("band_idx"), col("band_key"), col("id").as("id_b"))
-    l.join(r, Seq("band_idx", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-  }
-
   /** Exact token-set Jaccard between two DISTINCT-array columns, via
     * |a∩b| / (|a| + |b| - |a∩b|) — one intersection, no union
     * materialization. int/int division → bit-deterministic double. */
@@ -457,11 +439,6 @@ object Dedup {
     }
     labels
   }
-
-  /** nearDupClusters over a PRECOMPUTED pair list (shared with the pair
-    * query so the LSH+verify pipeline runs once per session/dir). */
-  def clustersOfPairs(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponents(pairs.select(col("id_a"), col("id_b")), maxIter)
 
   /** Near-duplicate clusters: components of the near-dup pair graph.
     * (doc_id, component); component = smallest doc id in the cluster.

@@ -31,13 +31,17 @@ import org.apache.spark.sql.{Encoder, Encoders}
 class RegMaxAggregator(m: Int)
     extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
   override def zero: Array[Byte] = Array.emptyByteArray
-  override def reduce(buf: Array[Byte], v: Array[Byte]): Array[Byte] =
+  override def reduce(buf: Array[Byte], v: Array[Byte]): Array[Byte] = {
+    // Every input row must carry exactly m registers: a short one would
+    // throw mid-loop, a long one would be silently cut to m.
+    require(v.length == m, s"RegMaxAggregator: register vector of ${v.length} bytes, expected $m")
     if (buf.length == 0) v.clone()
     else {
       var i = 0
       while (i < m) { if (v(i) > buf(i)) buf(i) = v(i); i += 1 }
       buf
     }
+  }
   override def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] =
     if (x.length == 0) y else reduce(x, y)
   override def finish(b: Array[Byte]): Array[Byte] =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Scalable EXACT global ranking — the range-partitioned two-pass that
   * replaces `row_number() OVER (ORDER BY …)`'s single sorted reducer
@@ -43,6 +44,17 @@ object GlobalRank {
     scala.util.Try(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
       .toOption.filter(_ > 0).getOrElse(200)
+
+  /** The collected per-shard carries below are longs: reject a value
+    * column that is not integral before any job runs, instead of failing
+    * in `Row.getLong` on the collected shard aggregates. */
+  private def requireIntegral(df: DataFrame, v: Column, op: String): Unit = {
+    val t = df.select(v).schema.head.dataType
+    require(t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }, s"GlobalRank.$op: value column $v must be an integral type, got ${t.sql}")
+  }
 
   /** Adds `outCol` = row_number() over (ORDER BY `order`…), computed with
     * a `shards`-way range exchange instead of a single-partition sort. */
@@ -122,9 +134,11 @@ object GlobalRank {
     * sort: both frames share one window spec, so Spark evaluates them in
     * a single WindowExec with no extra exchange.
     *
-    * REQUIREMENT: `orderCol` must be numeric (RANGE frame arithmetic). */
+    * REQUIREMENT: `orderCol` must be numeric (RANGE frame arithmetic);
+    * `valCol` must be integral (IllegalArgumentException otherwise). */
   def prefixMax(df: DataFrame, orderCol: Column, valCol: Column, outCol: String,
       inclusiveOut: String = null, shards: Int = 0): DataFrame = {
+    requireIntegral(df, valCol, "prefixMax")
     val n =
       if (shards > 0) shards
       else defaultShards(df)
@@ -151,12 +165,14 @@ object GlobalRank {
     // running max over shard order is each shard's carry-in — computed
     // DRIVER-SIDE from a collect (r14): materializes the cache in the
     // one pass already needed and leaves the final plan with one
-    // consumer of `parted` — see [[rowNumber]]. Values ride the repo's
-    // integer (LongType) discipline; a shard whose valCol is all-NULL
-    // carries no maximum (None), matching SQL max-over-empty semantics.
+    // consumer of `parted` — see [[rowNumber]]. The max keeps valCol's
+    // integral type, so it is read through Number; a shard whose valCol
+    // is all-NULL carries no maximum (None), matching SQL
+    // max-over-empty semantics.
     val maxima = parted.groupBy(col(pid)).agg(max(valCol).as(mx))
       .collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .map(r => (r.getLong(0),
+        if (r.isNullAt(1)) None else Some(r.getAs[Number](1).longValue)))
       .sortBy(_._1)
     var runMax: Option[Long] = None
     val offRows = maxima.map { case (p, m) =>
@@ -210,9 +226,11 @@ object GlobalRank {
     * column ride the same ≤`shards`-row metadata aggregate and one
     * broadcast join carries every carry-in back. N columns through
     * separate [[prefixSum]] calls would pay N range exchanges and N
-    * persists for the same answer. */
+    * persists for the same answer. Every value column must be integral
+    * (IllegalArgumentException otherwise). */
   def prefixSums(df: DataFrame, order: Seq[Column],
       valCols: Seq[(Column, String)], shards: Int = 0): DataFrame = {
+    valCols.foreach { case (v, _) => requireIntegral(df, v, "prefixSums") }
     val n =
       if (shards > 0) shards
       else defaultShards(df)

@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Sink operators (SURVEY.md §2.7 K1–K6).
   *
@@ -12,28 +11,14 @@ import org.apache.spark.sql.Row
   * contract: output is partitioned by low-cardinality routing columns so
   * downstream scans partition-prune, and compression stays Snappy (cheap
   * CPU, splittable pages).
+  *
+  * K1 (the streaming parquet sink) and K6 (waiting on several sinks) are
+  * [[graft.streaming.StreamPipeline.demuxToParquet]]: one query lands all
+  * three routes per micro-batch, so there is no second query to await.
   */
 object Sinks {
 
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("10 seconds")
-
-  /** K1: streaming parquet sink with checkpoint + trigger. `partitionBy`
-    * columns become physical directories → static/dynamic partition pruning
-    * for every downstream reader. */
-  def streamingParquet(
-      df: DataFrame,
-      path: String,
-      checkpoint: String,
-      trigger: Trigger = DefaultTrigger,
-      partitionBy: Seq[String] = Nil): StreamingQuery = {
-    val w: DataStreamWriter[Row] = df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .option("compression", "snappy")
-      .trigger(trigger)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).start()
-  }
 
   /** K2: console sink (debug; filter_swords_stream.py:62–65). */
   def console(df: DataFrame, trigger: Trigger = DefaultTrigger): StreamingQuery =
@@ -52,9 +37,4 @@ object Sinks {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"CREATE TABLE $table USING PARQUET LOCATION '$location'")
   }
-
-  /** K6 (fixed): the reference chains three blocking awaitTermination calls
-    * so sinks 2–3 never start (SURVEY.md §0.2). Correct multi-sink wait. */
-  def awaitAll(spark: SparkSession): Unit =
-    spark.streams.awaitAnyTermination()
 }

@@ -3345,6 +3345,16 @@ class QueriesSpec extends AnyFunSuite {
     assert(expected.drop(1).forall(_._4 > 0L), s"epochs 1+ must move shards: $expected")
   }
 
+  test("q284 memo hit: a second epochSchedule in the session runs no job and caches nothing") {
+    val first = graft.analytics.PipelineQueries.epochSchedule(spark, TestSpark.SfDir).collect()
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    val (again, jobs) = TestSpark.jobsStartedBy(
+      graft.analytics.PipelineQueries.epochSchedule(spark, TestSpark.SfDir))
+    assert(jobs == 0, s"memo-hit construction started $jobs Spark jobs")
+    assert(spark.sparkContext.getPersistentRDDs.size == cached)
+    assert(again.collect().toSeq == first.toSeq)
+  }
+
   test("q285 normalization: variants collapse onto their originals; clean source untouched") {
     import spark.implicits._
     // ids 0 and 7 re-enter as uppercased double-spaced variants; id 3 is clean.

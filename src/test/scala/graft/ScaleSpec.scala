@@ -346,6 +346,65 @@ class ScaleSpec extends AnyFunSuite {
     assert(plan.contains("2147483648"), s"packed key expected in plan:\n$plan")
   }
 
+  test("q177 pack gate: a negative node id keeps the 2-col wedge closure") {
+    // One open wedge -1 ← 10 → 20 (apex 10; -1 and 20 carry pendants so
+    // 10 orients towards both) and one edge 0 → t with t = 20 - 2³¹ (t's
+    // pendant orients it 0 → t). Packed, the wedge key -1·2³¹ + 20 equals
+    // the edge key 0·2³¹ + t, so the packed closure would count a
+    // triangle the graph does not have; every id is below 2³¹, so only
+    // the min(node) >= 0 bound keeps the gate off.
+    val t = 20L - (1L << 31)
+    val edges = Seq((10L, 20L), (-1L, 10L), (20L, 21L), (20L, 22L), (-1L, 23L), (-1L, 24L),
+      (t, 0L), (t, 25L)).toDF("u", "v")
+    val noParts = Seq.empty[(Long, Long)].toDF("ok", "pk")
+    def run(packIds: Option[Boolean]) = graft.analytics.PipelineQueries
+      .triangleCensusOf(noParts, memoEdges = Some(edges), adjMaxEdges = 0L, packIds = packIds)
+    val gated = run(None)
+    val plan = gated.queryExecution.executedPlan.toString
+    assert(!plan.contains("2147483648"), s"gate must keep the 2-col closure:\n$plan")
+    // 10 nodes, 8 edges, Σ C(deg, 2) = 1 + 3 + 3 + 1 = 8 wedges, no triangle.
+    val expected = Seq(Seq(10L, 8L, 8L, 0L, 0L))
+    assert(gated.collect().map(_.toSeq).toSeq == expected)
+    assert(run(Some(false)).collect().map(_.toSeq).toSeq == expected)
+    // The graph does exercise the hazard: forced packing miscounts.
+    assert(run(Some(true)).collect().head.getLong(3) == 1L)
+  }
+
+  test("RegMaxAggregator.reduce rejects a register vector of the wrong width") {
+    val agg = new graft.graph.RegMaxAggregator(4)
+    val buf = agg.reduce(agg.zero, Array[Byte](1, 2, 3, 4))
+    intercept[IllegalArgumentException](agg.reduce(agg.zero, Array[Byte](1, 2, 3)))
+    intercept[IllegalArgumentException](agg.reduce(buf, Array[Byte](1, 2, 3, 4, 5)))
+    assert(agg.reduce(buf, Array[Byte](0, 5, 0, 5)).toSeq == Seq[Byte](1, 5, 3, 5))
+  }
+
+  test("GlobalRank.prefixMax: non-integral values are rejected up front; int values are read") {
+    val df = spark.range(0L, 100L).selectExpr("id", "id % 7 AS k",
+      "CAST(id AS DOUBLE) AS d", "CAST(id AS DECIMAL(10,0)) AS dec", "CAST(id % 13 AS INT) AS i")
+    Seq("d", "dec").foreach { c =>
+      val (_, jobs) = TestSpark.jobsStartedBy(intercept[IllegalArgumentException](
+        graft.operators.GlobalRank.prefixMax(df, col("k"), col(c), "pm", shards = 4)))
+      assert(jobs == 0, s"$c: rejected after starting $jobs jobs")
+    }
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("k"))
+      .rangeBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val sharded = graft.operators.GlobalRank.prefixMax(df, col("k"), col("i"), "pm", shards = 4)
+      .select(col("id"), col("pm").cast("long"))
+    val serial = df.select(col("id"), max(col("i")).over(w).cast("long").as("pm"))
+    assert(sharded.exceptAll(serial).isEmpty && serial.exceptAll(sharded).isEmpty)
+  }
+
+  test("GlobalRank.prefixSums: non-integral value columns are rejected up front") {
+    val df = spark.range(0L, 100L).selectExpr("id",
+      "CAST(id AS DOUBLE) AS d", "CAST(id AS DECIMAL(10,0)) AS dec", "id AS v")
+    Seq("d", "dec").foreach { c =>
+      val (_, jobs) = TestSpark.jobsStartedBy(intercept[IllegalArgumentException](
+        graft.operators.GlobalRank.prefixSums(
+          df, Seq(col("id").asc), Seq(col("v") -> "pv", col(c) -> "pc"), shards = 4)))
+      assert(jobs == 0, s"$c: rejected after starting $jobs jobs")
+    }
+  }
+
   test("partitioned layout prunes directories at planning time") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
     val events = Tables.events(spark, TestSpark.SfDir)

@@ -396,58 +396,109 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("demux writes three disjoint parquet routes from one source read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_demux").toString
-    val gen1 = Seq(
-      """{"event_type": "purchase_sword", "sword_type": "iron"}""",
-      """{"event_type": "purchase_sword", "sword_type": "gold"}""",
-      """{"event_type": "join_guild", "guild_name": "g"}""",
-      """{"event_type": "other"}""").zipWithIndex
-      .map { case (j, i) => (j, new Timestamp(1700000000000L + i)) }
-    val (_, stream) = kafkaShapedStream(gen1)
-    val parsed = graft.operators.Parse.parseAndFlatten(
-      graft.operators.Parse.projectRaw(stream), model.EventModel.gen1Schema)
-    val q = StreamPipeline.demuxToParquet(
-      parsed, dir, trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q.awaitTermination()
-    assert(spark.read.parquet(s"$dir/sword_purchases").count() == 2)
-    assert(spark.read.parquet(s"$dir/guild_joins").count() == 1)
-    assert(spark.read.parquet(s"$dir/default_events").count() == 1)
+    TestSpark.withTempDir("graft_demux") { dir =>
+      val gen1 = Seq(
+        """{"event_type": "purchase_sword", "sword_type": "iron"}""",
+        """{"event_type": "purchase_sword", "sword_type": "gold"}""",
+        """{"event_type": "join_guild", "guild_name": "g"}""",
+        """{"event_type": "other"}""").zipWithIndex
+        .map { case (j, i) => (j, new Timestamp(1700000000000L + i)) }
+      val (_, stream) = kafkaShapedStream(gen1)
+      val parsed = graft.operators.Parse.parseAndFlatten(
+        graft.operators.Parse.projectRaw(stream), model.EventModel.gen1Schema)
+      val q = StreamPipeline.demuxToParquet(
+        parsed, dir, trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      assert(spark.read.parquet(s"$dir/sword_purchases").count() == 2)
+      assert(spark.read.parquet(s"$dir/guild_joins").count() == 1)
+      assert(spark.read.parquet(s"$dir/default_events").count() == 1)
+    }
   }
 
   test("demux batch writes are idempotent: a replayed micro-batch adds no duplicates") {
     // foreachBatch's contract: after a failure the SAME batchId is
     // re-delivered and the write must not double the rows. Simulated by
     // invoking the per-batch writer twice with one batchId.
-    val dir = java.nio.file.Files.createTempDirectory("graft_demux_replay").toString
-    val batch = Seq(
-      ("purchase_sword", "iron"), ("purchase_sword", "gold"), ("join_guild", "g"), ("other", ""))
-      .toDF("event_type", "detail")
-    val classify = graft.operators.Filters.classifyEvent(
-      org.apache.spark.sql.functions.col("event_type"))
-    StreamPipeline.writeRoutedBatch(batch, 0L, dir, classify)
-    StreamPipeline.writeRoutedBatch(batch, 0L, dir, classify) // replay
-    assert(spark.read.parquet(s"$dir/sword_purchases").count() == 2)
-    assert(spark.read.parquet(s"$dir/guild_joins").count() == 1)
-    assert(spark.read.parquet(s"$dir/default_events").count() == 1)
-    // A LATER batch still appends (its own partition), not overwrites.
-    StreamPipeline.writeRoutedBatch(batch.filter($"event_type" === "purchase_sword"), 1L, dir, classify)
-    assert(spark.read.parquet(s"$dir/sword_purchases").count() == 4)
+    TestSpark.withTempDir("graft_demux_replay") { dir =>
+      val batch = Seq(
+        ("purchase_sword", "iron"), ("purchase_sword", "gold"), ("join_guild", "g"), ("other", ""))
+        .toDF("event_type", "detail")
+      val classify = graft.operators.Filters.classifyEvent(
+        org.apache.spark.sql.functions.col("event_type"))
+      StreamPipeline.writeRoutedBatch(batch, 0L, dir, classify)
+      StreamPipeline.writeRoutedBatch(batch, 0L, dir, classify) // replay
+      assert(spark.read.parquet(s"$dir/sword_purchases").count() == 2)
+      assert(spark.read.parquet(s"$dir/guild_joins").count() == 1)
+      assert(spark.read.parquet(s"$dir/default_events").count() == 1)
+      // A LATER batch still appends (its own partition), not overwrites.
+      StreamPipeline.writeRoutedBatch(batch.filter($"event_type" === "purchase_sword"), 1L, dir, classify)
+      assert(spark.read.parquet(s"$dir/sword_purchases").count() == 4)
+    }
+  }
+
+  test("demux: a failed route write is rethrown only after the other routes finish") {
+    // sword_purchases is a plain FILE, so that route's write fails; the
+    // guild and default writes run alongside it and must have committed
+    // by the time writeRoutedBatch throws, with the per-batch cache
+    // released and the write's own exception surfacing unwrapped.
+    TestSpark.withTempDir("graft_demux_fail") { dir =>
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "sword_purchases"))
+      val batch = Seq(
+        ("purchase_sword", "iron"), ("join_guild", "g"), ("join_guild", "h"), ("other", ""))
+        .toDF("event_type", "detail")
+      val classify = graft.operators.Filters.classifyEvent(col("event_type"))
+      val cached = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[Exception](StreamPipeline.writeRoutedBatch(batch, 0L, dir, classify))
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException] &&
+        !e.isInstanceOf[java.util.concurrent.CompletionException], e)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+      Seq("guild_joins" -> 2L, "default_events" -> 1L).foreach { case (route, n) =>
+        // Dynamic overwrite stages a write and moves batch_id=0 into
+        // place only at job commit.
+        assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, route, "batch_id=0")), route)
+        assert(spark.read.parquet(s"$dir/$route").count() == n, route)
+      }
+    }
   }
 
   test("gen-2 classifier demuxes extractValidEvents output to the right routes") {
     // Composing the two documented entry points must not send every valid
     // event to default_events (gen-1 vs gen-2 vocabulary mismatch).
-    val dir = java.nio.file.Files.createTempDirectory("graft_demux_g2").toString
-    val (_, stream) = kafkaShapedStream(corpus)
-    val valid = StreamPipeline.extractValidEvents(stream)
-    val q = StreamPipeline.demuxToParquet(
-      valid, dir,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      classify = graft.operators.Filters.classifyEventGen2(
-        org.apache.spark.sql.functions.col("event_type")))
-    q.awaitTermination()
-    assert(spark.read.parquet(s"$dir/sword_purchases").count() == 30) // 10 + 20
-    assert(spark.read.parquet(s"$dir/guild_joins").count() == 5)
+    TestSpark.withTempDir("graft_demux_g2") { dir =>
+      val (_, stream) = kafkaShapedStream(corpus)
+      val valid = StreamPipeline.extractValidEvents(stream)
+      val q = StreamPipeline.demuxToParquet(
+        valid, dir,
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        classify = graft.operators.Filters.classifyEventGen2(
+          org.apache.spark.sql.functions.col("event_type")))
+      q.awaitTermination()
+      assert(spark.read.parquet(s"$dir/sword_purchases").count() == 30) // 10 + 20
+      assert(spark.read.parquet(s"$dir/guild_joins").count() == 5)
+    }
+  }
+
+  test("demux with observed ETL metrics counts each parsed row once per batch") {
+    // The three route writes read one cached frame: graft_etl must report
+    // a batch's input rows once, not once per route.
+    TestSpark.withTempDir("graft_demux_observed") { dir =>
+      val rows = corpus ++ Seq(("not json at all", new Timestamp(1700000100000L)))
+      val (_, stream) = kafkaShapedStream(rows)
+      val q = StreamPipeline.demuxToParquet(
+        StreamPipeline.extractValidEventsObserved(stream), dir,
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        classify = graft.operators.Filters.classifyEventGen2(col("event_type")))
+      q.awaitTermination()
+      val batches = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+      assert(batches.nonEmpty, "no micro-batch with input")
+      batches.foreach { p =>
+        val m = Option(p.observedMetrics.get("graft_etl"))
+        assert(m.isDefined, s"batch ${p.batchId} reported no graft_etl metrics")
+        assert(m.get.getAs[Long]("n_parsed") == p.numInputRows, s"batch ${p.batchId}")
+      }
+      assert(batches.map(_.numInputRows).sum == rows.length.toLong)
+      assert(spark.read.parquet(s"$dir/sword_purchases").count() == 30)
+    }
   }
 
   test("streaming ingest dedup: restart rebuilds the sketch and never re-admits a dupe") {
