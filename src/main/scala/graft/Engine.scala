@@ -13,7 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Engine {
 
   /** Build a tuned local session. `cores` maps to local[N] threads; on a real
-    * cluster the same configs apply with master supplied by spark-submit. */
+    * cluster the same configs apply with master supplied by spark-submit.
+    *
+    * `file://` paths go through graft's java.nio local file system
+    * (`graft.io`), which sets permissions and resolves links without
+    * forking `chmod`/`readlink`; other schemes are untouched. Hadoop caches
+    * FileSystem instances per scheme regardless of configuration, so a
+    * `file://` FileSystem created in this JVM before the first session keeps
+    * the stock (slower, equally correct) class, and [[tune]] cannot switch
+    * an external session's. */
   def session(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -25,6 +33,8 @@ object Engine {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -33,6 +33,14 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * REQUIREMENT: `order` must be a TOTAL order (include a unique
   * tiebreaker column) — equal full keys would make block-local ranks
   * nondeterministic across retries.
+  *
+  * EAGER: `rowNumber`, `prefixMax` and `prefixSums` (and `prefixSum`,
+  * which calls it) are not lazy plan builders. Each call persists its
+  * range-partitioned input (MEMORY_AND_DISK) and runs Spark jobs on the
+  * driver to collect the per-shard offsets before it returns the frame.
+  * A caller that only builds or explains the plan still pays those jobs,
+  * and the persisted frame stays registered until the caller unpersists
+  * it or the session ends.
   */
 object GlobalRank {
 

@@ -120,20 +120,22 @@ class EtlSpec extends AnyFunSuite {
   }
 
   test("sink round-trip: batch parquet overwrite preserves frame") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val before = parsed.filter(Filters.isValidEvent)
-    Sinks.batchParquet(before, s"$dir/out", partitionBy = Seq("event_type"))
-    val after = spark.read.parquet(s"$dir/out")
-    assert(after.count() == before.count())
-    assert(after.select("Host", "event_type", "event_detail").distinct().count() ==
-      before.select("Host", "event_type", "event_detail").distinct().count())
+    TestSpark.withTempDir("graft_sink") { dir =>
+      val before = parsed.filter(Filters.isValidEvent)
+      Sinks.batchParquet(before, s"$dir/out", partitionBy = Seq("event_type"))
+      val after = spark.read.parquet(s"$dir/out")
+      assert(after.count() == before.count())
+      assert(after.select("Host", "event_type", "event_detail").distinct().count() ==
+        before.select("Host", "event_type", "event_detail").distinct().count())
+    }
   }
 
   test("external table DDL registers a queryable catalog table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tbl").toString
-    Sinks.batchParquet(parsed.select("Host", "event_type"), s"$dir/t")
-    Sinks.registerExternalTable(spark, "graft_valid_events", s"$dir/t")
-    assert(spark.sql("SELECT count(*) FROM graft_valid_events").as[Long].head() == 335L)
-    spark.sql("DROP TABLE graft_valid_events")
+    TestSpark.withTempDir("graft_tbl") { dir =>
+      Sinks.batchParquet(parsed.select("Host", "event_type"), s"$dir/t")
+      Sinks.registerExternalTable(spark, "graft_valid_events", s"$dir/t")
+      assert(spark.sql("SELECT count(*) FROM graft_valid_events").as[Long].head() == 335L)
+      spark.sql("DROP TABLE graft_valid_events")
+    }
   }
 }

@@ -41,33 +41,33 @@ class IvfPqIndexSpec extends AnyFunSuite {
   }
 
   test("corpus change at the same path re-tags and rebuilds the index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_stale")
-    val corpusPath = s"$dir/corpus"
-    embs.write.parquet(corpusPath)
-    val v1 = spark.read.parquet(corpusPath)
-    val idx1 = IvfPqIndex.ensure(spark, v1, "vec_id", "embedding")
+    TestSpark.withTempDir("graft_ivfpq_stale") { dir =>
+      val corpusPath = s"$dir/corpus"
+      embs.write.parquet(corpusPath)
+      val v1 = spark.read.parquet(corpusPath)
+      val idx1 = IvfPqIndex.ensure(spark, v1, "vec_id", "embedding")
 
-    // Rewrite the corpus IN PLACE (drop 1/7 of the vectors): same path,
-    // different backing files — the metadata signature must change.
-    val staged = s"$dir/staged"
-    v1.filter(col("vec_id") % 7 =!= 0).write.parquet(staged)
-    def rmrf(p: java.nio.file.Path): Unit = {
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
+      // Rewrite the corpus IN PLACE (drop 1/7 of the vectors): same path,
+      // different backing files — the metadata signature must change.
+      val staged = s"$dir/staged"
+      v1.filter(col("vec_id") % 7 =!= 0).write.parquet(staged)
+      def rmrf(p: java.nio.file.Path): Unit = {
+        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => java.nio.file.Files.delete(f))
+      }
+      rmrf(java.nio.file.Paths.get(corpusPath))
+      java.nio.file.Files.move(java.nio.file.Paths.get(staged),
+        java.nio.file.Paths.get(corpusPath))
+
+      val v2 = spark.read.parquet(corpusPath)
+      val idx2 = IvfPqIndex.ensure(spark, v2, "vec_id", "embedding")
+      assert(idx2.location != idx1.location,
+        "changed corpus content must resolve to a different layout tag")
+      // And the rebuilt index serves the NEW corpus exactly.
+      val q2 = v2.filter(col("vec_id") % 50 === 0)
+      assert(rows(IvfPqIndex.search(spark, idx2, q2, "vec_id", "embedding", k = 10)) ==
+        rows(Pq.ivfPqTopKResidual(spark, q2, v2, "vec_id", "embedding", k = 10)))
     }
-    rmrf(java.nio.file.Paths.get(corpusPath))
-    java.nio.file.Files.move(java.nio.file.Paths.get(staged),
-      java.nio.file.Paths.get(corpusPath))
-
-    val v2 = spark.read.parquet(corpusPath)
-    val idx2 = IvfPqIndex.ensure(spark, v2, "vec_id", "embedding")
-    assert(idx2.location != idx1.location,
-      "changed corpus content must resolve to a different layout tag")
-    // And the rebuilt index serves the NEW corpus exactly.
-    val q2 = v2.filter(col("vec_id") % 50 === 0)
-    assert(rows(IvfPqIndex.search(spark, idx2, q2, "vec_id", "embedding", k = 10)) ==
-      rows(Pq.ivfPqTopKResidual(spark, q2, v2, "vec_id", "embedding", k = 10)))
-    rmrf(dir)
   }
 
   test("frozen-quantizer append: delta committed once, searched, replay-safe") {

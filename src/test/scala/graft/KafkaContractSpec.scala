@@ -99,32 +99,33 @@ class KafkaContractSpec extends AnyFunSuite {
     import graft.sources.EventGen
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kafka_restart").toString
-    val us = 1700000000000000L
-    def ev(i: Int) = (EventGen.json(
-      if (i % 2 == 0) "purchase_sword" else "join_guild", "", "", s"Player $i"), us + i * 1000000L)
-    KafkaEnvelopeTestProvider.stage((0 until 4).map(ev), partitions = 2)
-    val provider = classOf[KafkaEnvelopeTestProvider].getName
-    def startDemux() = {
-      val stream = EventSources.kafkaStream(spark, "broker-1:9092", "events", provider = provider)
-      graft.streaming.StreamPipeline.demuxToParquet(
-        graft.operators.Parse.extractEvents(stream), dir,
-        trigger = Trigger.ProcessingTime("100 milliseconds"))
+    TestSpark.withTempDir("graft_kafka_restart") { dir =>
+      val us = 1700000000000000L
+      def ev(i: Int) = (EventGen.json(
+        if (i % 2 == 0) "purchase_sword" else "join_guild", "", "", s"Player $i"), us + i * 1000000L)
+      KafkaEnvelopeTestProvider.stage((0 until 4).map(ev), partitions = 2)
+      val provider = classOf[KafkaEnvelopeTestProvider].getName
+      def startDemux() = {
+        val stream = EventSources.kafkaStream(spark, "broker-1:9092", "events", provider = provider)
+        graft.streaming.StreamPipeline.demuxToParquet(
+          graft.operators.Parse.extractEvents(stream), dir,
+          trigger = Trigger.ProcessingTime("100 milliseconds"))
+      }
+      val q1 = startDemux()
+      q1.processAllAvailable(); q1.stop(); q1.awaitTermination()
+      // The broker keeps receiving while the query is down...
+      KafkaEnvelopeTestProvider.stageMore((4 until 8).map(ev))
+      // ...and the restarted query resumes from the committed per-partition
+      // offsets: batch 0's four events are NOT replayed, the new four flow.
+      val q2 = startDemux()
+      q2.processAllAvailable(); q2.stop(); q2.awaitTermination()
+      val hosts = spark.read.parquet(s"$dir/sword_purchases")
+        .unionByName(spark.read.parquet(s"$dir/guild_joins"))
+        .select($"Host").as[String].collect().toSeq
+      // Every event exactly once — a replayed batch would duplicate Hosts.
+      assert(hosts.sorted == (0 until 8).map(i => s"Player $i"),
+        s"expected 8 unique hosts, got: $hosts")
     }
-    val q1 = startDemux()
-    q1.processAllAvailable(); q1.stop(); q1.awaitTermination()
-    // The broker keeps receiving while the query is down...
-    KafkaEnvelopeTestProvider.stageMore((4 until 8).map(ev))
-    // ...and the restarted query resumes from the committed per-partition
-    // offsets: batch 0's four events are NOT replayed, the new four flow.
-    val q2 = startDemux()
-    q2.processAllAvailable(); q2.stop(); q2.awaitTermination()
-    val hosts = spark.read.parquet(s"$dir/sword_purchases")
-      .unionByName(spark.read.parquet(s"$dir/guild_joins"))
-      .select($"Host").as[String].collect().toSeq
-    // Every event exactly once — a replayed batch would duplicate Hosts.
-    assert(hosts.sorted == (0 until 8).map(i => s"Player $i"),
-      s"expected 8 unique hosts, got: $hosts")
   }
 
   test("S1 executes end-to-end: builder -> DSv2 micro-batch -> ETL -> sink") {

@@ -2145,27 +2145,29 @@ class QueriesSpec extends AnyFunSuite {
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.6947f, 0.7193f)),
       (2L, Array(0.9205f, 0.3907f)), (3L, Array(0.9962f, 0.0872f)))
       .toDF("vec_id", "embedding")
-    val store = java.nio.file.Files.createTempDirectory("graft_admit_spec").toString + "/s"
-    val out1 = graft.similarity.SemDedup
-      .committedAdmission(spark, vecs, "vec_id", "embedding", store,
-        tau = 0.9, nlist = 1, nBatches = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(out1.toSeq == Seq((0L, 0L, 0L), (1L, 1L, 0L)), out1.toSeq.mkString(","))
-    // Per-wave (count, id-sum) from the STORE equal q240's lineage stats.
-    val stats = graft.similarity.SemDedup
-      .onlineAdmission(spark, vecs, "vec_id", "embedding",
-        tau = 0.9, nlist = 1, nBatches = 2)
-      .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(5))).toMap
-    val fromStore = out1.groupBy(_._1)
-      .map { case (b, rs) => b -> (rs.size.toLong, rs.map(_._2).sum) }
-    assert(fromStore == stats, s"store=$fromStore lineage=$stats")
-    // Replay over the already-published store: identical content (each
-    // wave reads only batch_id < b and rewrites its own partition).
-    val out2 = graft.similarity.SemDedup
-      .committedAdmission(spark, vecs, "vec_id", "embedding", store,
-        tau = 0.9, nlist = 1, nBatches = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(out2.toSeq == out1.toSeq)
+    TestSpark.withTempDir("graft_admit_spec") { work =>
+      val store = s"$work/s"
+      val out1 = graft.similarity.SemDedup
+        .committedAdmission(spark, vecs, "vec_id", "embedding", store,
+          tau = 0.9, nlist = 1, nBatches = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(out1.toSeq == Seq((0L, 0L, 0L), (1L, 1L, 0L)), out1.toSeq.mkString(","))
+      // Per-wave (count, id-sum) from the STORE equal q240's lineage stats.
+      val stats = graft.similarity.SemDedup
+        .onlineAdmission(spark, vecs, "vec_id", "embedding",
+          tau = 0.9, nlist = 1, nBatches = 2)
+        .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(5))).toMap
+      val fromStore = out1.groupBy(_._1)
+        .map { case (b, rs) => b -> (rs.size.toLong, rs.map(_._2).sum) }
+      assert(fromStore == stats, s"store=$fromStore lineage=$stats")
+      // Replay over the already-published store: identical content (each
+      // wave reads only batch_id < b and rewrites its own partition).
+      val out2 = graft.similarity.SemDedup
+        .committedAdmission(spark, vecs, "vec_id", "embedding", store,
+          tau = 0.9, nlist = 1, nBatches = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(out2.toSeq == out1.toSeq)
+    }
   }
 
   test("q255 BPE encode: hand-derived merges and symbol counts on a planted corpus (k=2)") {
@@ -2591,60 +2593,61 @@ class QueriesSpec extends AnyFunSuite {
   test("q264 score store: digest sync re-scores ONLY the edited partition") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val work = java.nio.file.Files.createTempDirectory("graft_q264_spec").toString
-    val corpus = s"$work/corpus"
-    val docs = Seq(
-      (0L, "s0", "alpha beta gamma"),
-      (1L, "s0", "delta epsilon"),
-      (2L, "s1", "zeta eta"),
-      (3L, "s1", "theta iota kappa"),
-      (4L, "s0", "mu nu"),
-      (5L, "s1", "xi omicron pi"))
-      .toDF("doc_id", "source", "text")
-      .withColumn("part_id", pmod(col("doc_id"), lit(3L)))
-    docs.write.partitionBy("part_id").parquet(corpus)
-    val score = (slice: org.apache.spark.sql.DataFrame) =>
-      graft.analytics.PipelineQueries.classifierDocScores(slice)
+    TestSpark.withTempDir("graft_q264_spec") { work =>
+      val corpus = s"$work/corpus"
+      val docs = Seq(
+        (0L, "s0", "alpha beta gamma"),
+        (1L, "s0", "delta epsilon"),
+        (2L, "s1", "zeta eta"),
+        (3L, "s1", "theta iota kappa"),
+        (4L, "s0", "mu nu"),
+        (5L, "s1", "xi omicron pi"))
+        .toDF("doc_id", "source", "text")
+        .withColumn("part_id", pmod(col("doc_id"), lit(3L)))
+      docs.write.partitionBy("part_id").parquet(corpus)
+      val score = (slice: org.apache.spark.sql.DataFrame) =>
+        graft.analytics.PipelineQueries.classifierDocScores(slice)
+          .select(col("doc_id"), col("pred_class"), col("margin"))
+      graft.operators.ScoreStore.sync(spark, corpus, score)
+      def files(p: String) = {
+        val fs = new org.apache.hadoop.fs.Path(p)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.listStatus(new org.apache.hadoop.fs.Path(p)).filter(_.isFile)
+          .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+          .sortBy(_._1).toSeq
+      }
+      val part0Before = files(s"$corpus/_scores/part_id=0")
+      val part1Before = files(s"$corpus/_scores/part_id=1")
+      Thread.sleep(1100) // local-fs mtime can be second-granular
+      // Out-of-band edit of corpus partition 1 (derived from the source
+      // frame — the overwrite never reads its own target).
+      docs.filter(col("part_id") === 1L)
+        .withColumn("text", concat(col("text"), lit(" edited")))
+        .drop("part_id").write.mode("overwrite").parquet(s"$corpus/part_id=1")
+      graft.operators.ScoreStore.sync(spark, corpus, score)
+      assert(files(s"$corpus/_scores/part_id=0") == part0Before,
+        "untouched partition must not re-score")
+      assert(files(s"$corpus/_scores/part_id=1") != part1Before,
+        "edited partition must re-score")
+      // No-op sync: digests match the state — nothing rewritten.
+      val part1After = files(s"$corpus/_scores/part_id=1")
+      graft.operators.ScoreStore.sync(spark, corpus, score)
+      assert(files(s"$corpus/_scores/part_id=1") == part1After,
+        "a no-diff sync must not rewrite the store")
+      // Store contents == a fresh full score of the FINAL corpus state.
+      val expected = graft.analytics.PipelineQueries.classifierDocScores(
+          docs.withColumn("text",
+            when(col("part_id") === 1L, concat(col("text"), lit(" edited")))
+              .otherwise(col("text"))))
         .select(col("doc_id"), col("pred_class"), col("margin"))
-    graft.operators.ScoreStore.sync(spark, corpus, score)
-    def files(p: String) = {
-      val fs = new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(p)).filter(_.isFile)
-        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
         .sortBy(_._1).toSeq
+      val got = graft.operators.ScoreStore.read(spark, corpus)
+        .select(col("doc_id"), col("pred_class"), col("margin"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+        .sortBy(_._1).toSeq
+      assert(got == expected, s"got $got, expected $expected")
     }
-    val part0Before = files(s"$corpus/_scores/part_id=0")
-    val part1Before = files(s"$corpus/_scores/part_id=1")
-    Thread.sleep(1100) // local-fs mtime can be second-granular
-    // Out-of-band edit of corpus partition 1 (derived from the source
-    // frame — the overwrite never reads its own target).
-    docs.filter(col("part_id") === 1L)
-      .withColumn("text", concat(col("text"), lit(" edited")))
-      .drop("part_id").write.mode("overwrite").parquet(s"$corpus/part_id=1")
-    graft.operators.ScoreStore.sync(spark, corpus, score)
-    assert(files(s"$corpus/_scores/part_id=0") == part0Before,
-      "untouched partition must not re-score")
-    assert(files(s"$corpus/_scores/part_id=1") != part1Before,
-      "edited partition must re-score")
-    // No-op sync: digests match the state — nothing rewritten.
-    val part1After = files(s"$corpus/_scores/part_id=1")
-    graft.operators.ScoreStore.sync(spark, corpus, score)
-    assert(files(s"$corpus/_scores/part_id=1") == part1After,
-      "a no-diff sync must not rewrite the store")
-    // Store contents == a fresh full score of the FINAL corpus state.
-    val expected = graft.analytics.PipelineQueries.classifierDocScores(
-        docs.withColumn("text",
-          when(col("part_id") === 1L, concat(col("text"), lit(" edited")))
-            .otherwise(col("text"))))
-      .select(col("doc_id"), col("pred_class"), col("margin"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-    val got = graft.operators.ScoreStore.read(spark, corpus)
-      .select(col("doc_id"), col("pred_class"), col("margin"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-    assert(got == expected, s"got $got, expected $expected")
   }
 
   test("score store sidecars: two materializations on one corpus stay independent") {
@@ -2654,61 +2657,62 @@ class QueriesSpec extends AnyFunSuite {
     // never touch, rewrite, or invalidate the other.
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val work = java.nio.file.Files.createTempDirectory("graft_sidecar_spec").toString
-    val corpus = s"$work/corpus"
-    val docs = Seq(
-      (0L, "s0", "alpha beta gamma delta epsilon alpha beta gamma delta epsilon"),
-      (1L, "s0", "zeta eta theta iota kappa"),
-      (2L, "s1", "mu nu xi omicron pi"))
-      .toDF("doc_id", "source", "text")
-      .withColumn("part_id", pmod(col("doc_id"), lit(2L)))
-    docs.write.partitionBy("part_id").parquet(corpus)
-    val score = (s: org.apache.spark.sql.DataFrame) =>
-      graft.analytics.PipelineQueries.classifierDocScores(s)
-        .select(col("doc_id"), col("pred_class"), col("margin"))
-    graft.operators.ScoreStore.sync(spark, corpus, score)
-    graft.operators.ScoreStore.sync(spark, corpus,
-      graft.analytics.PipelineQueries.segmentPartials, sidecar = "_boiler")
-    // Both sidecars committed, both readable, with independent payloads.
-    assert(graft.operators.ScoreStore.read(spark, corpus).count() == 3L)
-    val boiler = graft.operators.ScoreStore.read(spark, corpus, sidecar = "_boiler")
-    assert(boiler.columns.toSet == Set("source", "segh", "n_inst", "n_docs", "part_id"))
-    assert(boiler.count() > 0L)
-    // Corpus reads never see either sidecar.
-    assert(spark.read.parquet(corpus).count() == 3L)
-    // An out-of-band edit re-syncs each store independently: syncing the
-    // scores sidecar must leave the boiler sidecar's state STALE-aware —
-    // its own next sync still sees (and re-signs) the edit.
-    def files(p: String) = {
-      val fs = new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(p)).filter(_.isFile)
-        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
-        .sortBy(_._1).toSeq
+    TestSpark.withTempDir("graft_sidecar_spec") { work =>
+      val corpus = s"$work/corpus"
+      val docs = Seq(
+        (0L, "s0", "alpha beta gamma delta epsilon alpha beta gamma delta epsilon"),
+        (1L, "s0", "zeta eta theta iota kappa"),
+        (2L, "s1", "mu nu xi omicron pi"))
+        .toDF("doc_id", "source", "text")
+        .withColumn("part_id", pmod(col("doc_id"), lit(2L)))
+      docs.write.partitionBy("part_id").parquet(corpus)
+      val score = (s: org.apache.spark.sql.DataFrame) =>
+        graft.analytics.PipelineQueries.classifierDocScores(s)
+          .select(col("doc_id"), col("pred_class"), col("margin"))
+      graft.operators.ScoreStore.sync(spark, corpus, score)
+      graft.operators.ScoreStore.sync(spark, corpus,
+        graft.analytics.PipelineQueries.segmentPartials, sidecar = "_boiler")
+      // Both sidecars committed, both readable, with independent payloads.
+      assert(graft.operators.ScoreStore.read(spark, corpus).count() == 3L)
+      val boiler = graft.operators.ScoreStore.read(spark, corpus, sidecar = "_boiler")
+      assert(boiler.columns.toSet == Set("source", "segh", "n_inst", "n_docs", "part_id"))
+      assert(boiler.count() > 0L)
+      // Corpus reads never see either sidecar.
+      assert(spark.read.parquet(corpus).count() == 3L)
+      // An out-of-band edit re-syncs each store independently: syncing the
+      // scores sidecar must leave the boiler sidecar's state STALE-aware —
+      // its own next sync still sees (and re-signs) the edit.
+      def files(p: String) = {
+        val fs = new org.apache.hadoop.fs.Path(p)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.listStatus(new org.apache.hadoop.fs.Path(p)).filter(_.isFile)
+          .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+          .sortBy(_._1).toSeq
+      }
+      Thread.sleep(1100) // local-fs mtime can be second-granular
+      docs.filter(col("part_id") === 1L)
+        .withColumn("text", concat(col("text"), lit(" edited")))
+        .drop("part_id").write.mode("overwrite").parquet(s"$corpus/part_id=1")
+      val boilerBefore = files(s"$corpus/_boiler/part_id=1")
+      graft.operators.ScoreStore.sync(spark, corpus, score) // scores only
+      assert(files(s"$corpus/_boiler/part_id=1") == boilerBefore,
+        "a scores sync must not touch the boiler sidecar")
+      graft.operators.ScoreStore.sync(spark, corpus,
+        graft.analytics.PipelineQueries.segmentPartials, sidecar = "_boiler")
+      assert(files(s"$corpus/_boiler/part_id=1") != boilerBefore,
+        "the boiler sidecar's own sync must still see the edit")
+      // Non-underscore sidecar names are rejected (corpus reads would see them).
+      intercept[IllegalArgumentException] {
+        graft.operators.ScoreStore.sync(spark, corpus, score, sidecar = "scores")
+      }
+      // ...on BOTH ends of the API (round-12 advice #4): without the read
+      // guard, read(spark, corpus, "scores") silently read corpus DATA
+      // files as if they were a store.
+      intercept[IllegalArgumentException] {
+        graft.operators.ScoreStore.read(spark, corpus, sidecar = "scores")
+      }
+      ()
     }
-    Thread.sleep(1100) // local-fs mtime can be second-granular
-    docs.filter(col("part_id") === 1L)
-      .withColumn("text", concat(col("text"), lit(" edited")))
-      .drop("part_id").write.mode("overwrite").parquet(s"$corpus/part_id=1")
-    val boilerBefore = files(s"$corpus/_boiler/part_id=1")
-    graft.operators.ScoreStore.sync(spark, corpus, score) // scores only
-    assert(files(s"$corpus/_boiler/part_id=1") == boilerBefore,
-      "a scores sync must not touch the boiler sidecar")
-    graft.operators.ScoreStore.sync(spark, corpus,
-      graft.analytics.PipelineQueries.segmentPartials, sidecar = "_boiler")
-    assert(files(s"$corpus/_boiler/part_id=1") != boilerBefore,
-      "the boiler sidecar's own sync must still see the edit")
-    // Non-underscore sidecar names are rejected (corpus reads would see them).
-    intercept[IllegalArgumentException] {
-      graft.operators.ScoreStore.sync(spark, corpus, score, sidecar = "scores")
-    }
-    // ...on BOTH ends of the API (round-12 advice #4): without the read
-    // guard, read(spark, corpus, "scores") silently read corpus DATA
-    // files as if they were a store.
-    intercept[IllegalArgumentException] {
-      graft.operators.ScoreStore.read(spark, corpus, sidecar = "scores")
-    }
-    ()
   }
 
   test("q265 repeat allocation: greedy epoch competition equals a sequential replica") {
@@ -3095,49 +3099,50 @@ class QueriesSpec extends AnyFunSuite {
   test("q277 boiler store: partial-merge card equals the direct q270 card; ingest sync touches only the new partition") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val work = java.nio.file.Files.createTempDirectory("graft_q277_spec").toString
-    val corpus = s"$work/corpus"
-    val base = Seq(
-      (0L, "s0", "a b c d e x1 x2 x3 x4 x5"),
-      (1L, "s0", "a b c d e y1 y2 y3 y4 y5"),
-      (2L, "s1", "a b c d e z1 z2 z3 z4 z5"),
-      (3L, "s1", "q r s t u v w x y z"))
-    val docs = base.toDF("doc_id", "source", "text")
-      .withColumn("part_id", pmod(col("doc_id"), lit(3L)))
-    docs.write.partitionBy("part_id").parquet(corpus)
-    val partials = (slice: org.apache.spark.sql.DataFrame) =>
-      graft.analytics.PipelineQueries.docSegments(slice)
-        .groupBy(col("source"), col("segh"))
-        .agg(count(lit(1)).as("n_inst"), countDistinct(col("doc_id")).as("n_docs"))
-    graft.operators.ScoreStore.sync(spark, corpus, partials)
-    val fs = new org.apache.hadoop.fs.Path(corpus)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mtimes(): Map[String, Long] = (0 to 2).flatMap { p =>
-      val d = new org.apache.hadoop.fs.Path(s"$corpus/_scores/part_id=$p")
-      fs.listStatus(d).map(s => s.getPath.toString -> s.getModificationTime)
-    }.toMap
-    val before = mtimes()
-    // Ingest batch: a new partition whose docs share a banner segment
-    // with each other AND the seed's recurring segment.
-    val batch = Seq(
-      (100L, "s0", "a b c d e b1 b2 b3 b4 b5"),
-      (101L, "s1", "a b c d e b1 b2 b3 b4 b5"))
-    batch.toDF("doc_id", "source", "text")
-      .write.mode("overwrite").parquet(s"$corpus/part_id=3")
-    graft.operators.ScoreStore.sync(spark, corpus, partials)
-    assert(mtimes() == before,
-      "committed seed partials must be byte-stable across the ingest sync")
-    val got = graft.analytics.PipelineQueries
-      .boilerCardFromPartials(graft.operators.ScoreStore.read(spark, corpus))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSeq
-    val direct = graft.analytics.PipelineQueries
-      .segmentBoilerplateOf((base ++ batch).toDF("doc_id", "source", "text"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSeq
-    assert(got == direct, s"store card $got must equal direct card $direct")
-    // the recurring "a b c d e" must actually be flagged (4 seed+batch docs)
-    assert(got.exists(_._3 > 0), "planted boilerplate must surface in the card")
+    TestSpark.withTempDir("graft_q277_spec") { work =>
+      val corpus = s"$work/corpus"
+      val base = Seq(
+        (0L, "s0", "a b c d e x1 x2 x3 x4 x5"),
+        (1L, "s0", "a b c d e y1 y2 y3 y4 y5"),
+        (2L, "s1", "a b c d e z1 z2 z3 z4 z5"),
+        (3L, "s1", "q r s t u v w x y z"))
+      val docs = base.toDF("doc_id", "source", "text")
+        .withColumn("part_id", pmod(col("doc_id"), lit(3L)))
+      docs.write.partitionBy("part_id").parquet(corpus)
+      val partials = (slice: org.apache.spark.sql.DataFrame) =>
+        graft.analytics.PipelineQueries.docSegments(slice)
+          .groupBy(col("source"), col("segh"))
+          .agg(count(lit(1)).as("n_inst"), countDistinct(col("doc_id")).as("n_docs"))
+      graft.operators.ScoreStore.sync(spark, corpus, partials)
+      val fs = new org.apache.hadoop.fs.Path(corpus)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def mtimes(): Map[String, Long] = (0 to 2).flatMap { p =>
+        val d = new org.apache.hadoop.fs.Path(s"$corpus/_scores/part_id=$p")
+        fs.listStatus(d).map(s => s.getPath.toString -> s.getModificationTime)
+      }.toMap
+      val before = mtimes()
+      // Ingest batch: a new partition whose docs share a banner segment
+      // with each other AND the seed's recurring segment.
+      val batch = Seq(
+        (100L, "s0", "a b c d e b1 b2 b3 b4 b5"),
+        (101L, "s1", "a b c d e b1 b2 b3 b4 b5"))
+      batch.toDF("doc_id", "source", "text")
+        .write.mode("overwrite").parquet(s"$corpus/part_id=3")
+      graft.operators.ScoreStore.sync(spark, corpus, partials)
+      assert(mtimes() == before,
+        "committed seed partials must be byte-stable across the ingest sync")
+      val got = graft.analytics.PipelineQueries
+        .boilerCardFromPartials(graft.operators.ScoreStore.read(spark, corpus))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).toSeq
+      val direct = graft.analytics.PipelineQueries
+        .segmentBoilerplateOf((base ++ batch).toDF("doc_id", "source", "text"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).toSeq
+      assert(got == direct, s"store card $got must equal direct card $direct")
+      // the recurring "a b c d e" must actually be flagged (4 seed+batch docs)
+      assert(got.exists(_._3 > 0), "planted boilerplate must surface in the card")
+    }
   }
 
   test("q278 chunk reassembly: finds 5- and 7-token seams and replays the splitter") {
@@ -3547,21 +3552,22 @@ class QueriesSpec extends AnyFunSuite {
   test("q293 stream trender: micro-batch partials merge to exactly the batch q287 card") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, timestamp_seconds}
-    val work = java.nio.file.Files.createTempDirectory("graft_q293_spec").toString
-    val rows = Seq.fill(3)((1L, 100L)) ++ Seq.fill(5)((2L, 99L)) ++
-      Seq.fill(100)((3L, 91L)) ++ Seq.fill(2)((4L, 92L))
-    val events = rows.zipWithIndex.map { case ((u, h), i) => (i.toLong, u, h) }
-      .toDF("event_id", "user_id", "h")
-      .withColumn("ts", timestamp_seconds(col("h") * 3600L))
-      .select(col("event_id"), col("ts"), col("user_id"))
-    events.write.parquet(s"$work/events.parquet")
-    val got = graft.analytics.PipelineQueries.streamTrender(spark, work)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
-    assert(got == Seq(
-      (1L, 768L, 3L, 1L), (2L, 640L, 5L, 1L),
-      (4L, 2L, 2L, 1L), (3L, 0L, 100L, 1L)), s"got $got")
+    TestSpark.withTempDir("graft_q293_spec") { work =>
+      val rows = Seq.fill(3)((1L, 100L)) ++ Seq.fill(5)((2L, 99L)) ++
+        Seq.fill(100)((3L, 91L)) ++ Seq.fill(2)((4L, 92L))
+      val events = rows.zipWithIndex.map { case ((u, h), i) => (i.toLong, u, h) }
+        .toDF("event_id", "user_id", "h")
+        .withColumn("ts", timestamp_seconds(col("h") * 3600L))
+        .select(col("event_id"), col("ts"), col("user_id"))
+      events.write.parquet(s"$work/events.parquet")
+      val got = graft.analytics.PipelineQueries.streamTrender(spark, work)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSeq
+      assert(got == Seq(
+        (1L, 768L, 3L, 1L), (2L, 640L, 5L, 1L),
+        (4L, 2L, 2L, 1L), (3L, 0L, 100L, 1L)), s"got $got")
+    }
   }
 
   test("q294 FIM: cut points, modes, and shares equal a sequential replica") {
@@ -3596,122 +3602,125 @@ class QueriesSpec extends AnyFunSuite {
     val d = graft.similarity.Pq.Dim
     val rnd = new scala.util.Random(5L)
     val vecs = (0 until 120).map(i => (i.toLong, Seq.fill(d)(rnd.nextFloat() - 0.5f)))
-    val work = java.nio.file.Files.createTempDirectory("graft_q295_spec").toString
-    vecs.toDF("vec_id", "embedding").write.parquet(s"$work/embeddings.parquet")
-    // Sequential replica over the same planes.
-    val planes = graft.similarity.Ann.hyperplanes(P.MpTables, P.MpBits, d, P.MpSeed)
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      a.zip(b).foreach { case (x, y) =>
-        dot += x.toDouble * y.toDouble; na += x.toDouble * x.toDouble
-        nb += y.toDouble * y.toDouble
+    TestSpark.withTempDir("graft_q295_spec") { work =>
+      vecs.toDF("vec_id", "embedding").write.parquet(s"$work/embeddings.parquet")
+      // Sequential replica over the same planes.
+      val planes = graft.similarity.Ann.hyperplanes(P.MpTables, P.MpBits, d, P.MpSeed)
+      def cos(a: Seq[Float], b: Seq[Float]): Double = {
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        a.zip(b).foreach { case (x, y) =>
+          dot += x.toDouble * y.toDouble; na += x.toDouble * x.toDouble
+          nb += y.toDouble * y.toDouble
+        }
+        dot / math.sqrt(na * nb)
       }
-      dot / math.sqrt(na * nb)
-    }
-    def keyAndFlip(v: Seq[Float], t: Int): (Long, Long) = {
-      var key = 0L; var bestA = Double.MaxValue; var bestB = 0
-      for (b <- planes(t).indices) {
-        val dot = planes(t)(b).zipWithIndex.map { case (p, j) => v(j) * p }.sum
-        if (dot > 0) key |= (1L << b)
-        if (math.abs(dot) < bestA) { bestA = math.abs(dot); bestB = b }
+      def keyAndFlip(v: Seq[Float], t: Int): (Long, Long) = {
+        var key = 0L; var bestA = Double.MaxValue; var bestB = 0
+        for (b <- planes(t).indices) {
+          val dot = planes(t)(b).zipWithIndex.map { case (p, j) => v(j) * p }.sum
+          if (dot > 0) key |= (1L << b)
+          if (math.abs(dot) < bestA) { bestA = math.abs(dot); bestB = b }
+        }
+        (key, key ^ (1L << bestB))
       }
-      (key, key ^ (1L << bestB))
-    }
-    val sig = vecs.map { case (id, v) =>
-      id -> (0 until P.MpTables).map(t => keyAndFlip(v, t))
-    }.toMap
-    val qs = vecs.filter(_._1 % 50 == 0)
-    val truth = qs.map { case (qid, qv) =>
-      qid -> vecs.filter(_._1 != qid)
-        .map { case (id, v) => (id, cos(qv, v)) }
-        .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1).toSet
-    }.toMap
-    def replicaCard(twoProbe: Boolean): (Long, Long, Long) = {
-      val cand = qs.flatMap { case (qid, _) =>
-        vecs.filter(_._1 != qid).collect { case (id, _) if (0 until P.MpTables).exists { t =>
-          val qk = sig(qid)(t); val ck = sig(id)(t)._1
-          ck == qk._1 || (twoProbe && ck == qk._2)
-        } => (qid, id) }
+      val sig = vecs.map { case (id, v) =>
+        id -> (0 until P.MpTables).map(t => keyAndFlip(v, t))
+      }.toMap
+      val qs = vecs.filter(_._1 % 50 == 0)
+      val truth = qs.map { case (qid, qv) =>
+        qid -> vecs.filter(_._1 != qid)
+          .map { case (id, v) => (id, cos(qv, v)) }
+          .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1).toSet
+      }.toMap
+      def replicaCard(twoProbe: Boolean): (Long, Long, Long) = {
+        val cand = qs.flatMap { case (qid, _) =>
+          vecs.filter(_._1 != qid).collect { case (id, _) if (0 until P.MpTables).exists { t =>
+            val qk = sig(qid)(t); val ck = sig(id)(t)._1
+            ck == qk._1 || (twoProbe && ck == qk._2)
+          } => (qid, id) }
+        }
+        val hits = cand.groupBy(_._1).toSeq.map { case (qid, ps) =>
+          val qv = vecs(qid.toInt)._2
+          val top = ps.map(_._2).distinct
+            .map(id => (id, cos(qv, vecs(id.toInt)._2)))
+            .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1)
+          top.count(truth(qid))
+        }.sum
+        (cand.distinct.size.toLong, hits.toLong,
+          hits.toLong * 10000L / (qs.size.toLong * 10L))
       }
-      val hits = cand.groupBy(_._1).toSeq.map { case (qid, ps) =>
-        val qv = vecs(qid.toInt)._2
-        val top = ps.map(_._2).distinct
-          .map(id => (id, cos(qv, vecs(id.toInt)._2)))
-          .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1)
-        top.count(truth(qid))
-      }.sum
-      (cand.distinct.size.toLong, hits.toLong,
-        hits.toLong * 10000L / (qs.size.toLong * 10L))
+      val (p1, h1, r1) = replicaCard(twoProbe = false)
+      val (p2, h2, r2) = replicaCard(twoProbe = true)
+      val got = P.multiProbeLsh(spark, work)
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toSeq
+      assert(got == Seq(
+        ("single", qs.size.toLong, p1, h1, r1),
+        ("two_probe", qs.size.toLong, p2, h2, r2)), s"got $got vs $p1/$h1/$r1 $p2/$h2/$r2")
+      assert(p2 >= p1 && r2 >= r1, "two-probe must dominate single-probe")
     }
-    val (p1, h1, r1) = replicaCard(twoProbe = false)
-    val (p2, h2, r2) = replicaCard(twoProbe = true)
-    val got = P.multiProbeLsh(spark, work)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSeq
-    assert(got == Seq(
-      ("single", qs.size.toLong, p1, h1, r1),
-      ("two_probe", qs.size.toLong, p2, h2, r2)), s"got $got vs $p1/$h1/$r1 $p2/$h2/$r2")
-    assert(p2 >= p1 && r2 >= r1, "two-probe must dominate single-probe")
   }
 
   test("q296 KMV difference: planted audiences land the exact threshold-sample arithmetic") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, timestamp_seconds}
-    val work = java.nio.file.Files.createTempDirectory("graft_q296_spec").toString
-    val usersA = (1L to 6L).toSeq
-    val usersB = (4L to 9L).toSeq
-    val rows = usersA.map(("a", _)) ++ usersB.map(("b", _))
-    rows.zipWithIndex.map { case ((t, u), i) => (i.toLong, t, u, 100L) }
-      .toDF("event_id", "event_type", "user_id", "h")
-      .withColumn("ts", timestamp_seconds(col("h") * 3600L))
-      .drop("h")
-      .write.parquet(s"$work/events.parquet")
-    val (p, c1, c2) = (2147483647L, 2654435761L, 1013904223L)
-    def hv(u: Long) = ((u % p) * c1 + c2) % p
-    val va = usersA.map(hv).distinct.sorted
-    val vb = usersB.map(hv).distinct.sorted
-    val uk = (va ++ vb).distinct.sorted
-    val m = uk.size // 9 < k=128: sketches hold everything
-    val estU = (m - 1).toLong * p / uk(m - 1)
-    val dAb = uk.take(m).count(x => va.contains(x) && !vb.contains(x))
-    val dBa = uk.take(m).count(x => vb.contains(x) && !va.contains(x))
-    val (estAb, estBa) = (estU * dAb / m, estU * dBa / m)
-    val exactU = 9L
-    val expected = Seq(("a", "b", 3L, 3L, estAb, estBa,
-      math.abs(estAb - 3L) * 10000L / exactU, math.abs(estBa - 3L) * 10000L / exactU))
-    val got = graft.analytics.PipelineQueries.kmvDifference(spark, work)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
-      .toSeq
-    assert(got == expected, s"got $got, expected $expected")
+    TestSpark.withTempDir("graft_q296_spec") { work =>
+      val usersA = (1L to 6L).toSeq
+      val usersB = (4L to 9L).toSeq
+      val rows = usersA.map(("a", _)) ++ usersB.map(("b", _))
+      rows.zipWithIndex.map { case ((t, u), i) => (i.toLong, t, u, 100L) }
+        .toDF("event_id", "event_type", "user_id", "h")
+        .withColumn("ts", timestamp_seconds(col("h") * 3600L))
+        .drop("h")
+        .write.parquet(s"$work/events.parquet")
+      val (p, c1, c2) = (2147483647L, 2654435761L, 1013904223L)
+      def hv(u: Long) = ((u % p) * c1 + c2) % p
+      val va = usersA.map(hv).distinct.sorted
+      val vb = usersB.map(hv).distinct.sorted
+      val uk = (va ++ vb).distinct.sorted
+      val m = uk.size // 9 < k=128: sketches hold everything
+      val estU = (m - 1).toLong * p / uk(m - 1)
+      val dAb = uk.take(m).count(x => va.contains(x) && !vb.contains(x))
+      val dBa = uk.take(m).count(x => vb.contains(x) && !va.contains(x))
+      val (estAb, estBa) = (estU * dAb / m, estU * dBa / m)
+      val exactU = 9L
+      val expected = Seq(("a", "b", 3L, 3L, estAb, estBa,
+        math.abs(estAb - 3L) * 10000L / exactU, math.abs(estBa - 3L) * 10000L / exactU))
+      val got = graft.analytics.PipelineQueries.kmvDifference(spark, work)
+        .collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
+        .toSeq
+      assert(got == expected, s"got $got, expected $expected")
+    }
   }
 
   test("q297 median binary quant: planted skewed dim balances under the median threshold") {
     import spark.implicits._
     val d = graft.similarity.Pq.Dim
-    val work = java.nio.file.Files.createTempDirectory("graft_q297_spec").toString
-    // dim0 all-positive {0.25..1.25} (zero-threshold saturates: imb 5000;
-    // median 0.75 rebalances: ones=2, imb 1000); dim1 centered {-0.5..0.5}
-    // (both thresholds at 0: imb 1000); dims 2..63 constant zero (imb 5000
-    // under both). Only vec 0 queries; its brute top-10 is all 4 others and
-    // both candidate stages admit everything, so recall is 4000 bp on both
-    // variants — the card isolates the imbalance delta.
-    val vecs = (0 until 5).map { i =>
-      (i.toLong, Seq.tabulate(d)(k =>
-        if (k == 0) 0.25f * (i + 1) else if (k == 1) -0.5f + 0.25f * i else 0f))
+    TestSpark.withTempDir("graft_q297_spec") { work =>
+      // dim0 all-positive {0.25..1.25} (zero-threshold saturates: imb 5000;
+      // median 0.75 rebalances: ones=2, imb 1000); dim1 centered {-0.5..0.5}
+      // (both thresholds at 0: imb 1000); dims 2..63 constant zero (imb 5000
+      // under both). Only vec 0 queries; its brute top-10 is all 4 others and
+      // both candidate stages admit everything, so recall is 4000 bp on both
+      // variants — the card isolates the imbalance delta.
+      val vecs = (0 until 5).map { i =>
+        (i.toLong, Seq.tabulate(d)(k =>
+          if (k == 0) 0.25f * (i + 1) else if (k == 1) -0.5f + 0.25f * i else 0f))
+      }
+      vecs.toDF("vec_id", "embedding").write.parquet(s"$work/embeddings.parquet")
+      val got = graft.analytics.PipelineQueries.medianBinaryQuant(spark, work)
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toSeq
+      val imbZero = (5000L * 62 + 5000L + 1000L) / d
+      val imbMed = (5000L * 62 + 1000L + 1000L) / d
+      assert(got == Seq(
+        ("median", 1L, 4L, 4000L, imbMed),
+        ("zero", 1L, 4L, 4000L, imbZero)), s"got $got")
     }
-    vecs.toDF("vec_id", "embedding").write.parquet(s"$work/embeddings.parquet")
-    val got = graft.analytics.PipelineQueries.medianBinaryQuant(spark, work)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSeq
-    val imbZero = (5000L * 62 + 5000L + 1000L) / d
-    val imbMed = (5000L * 62 + 1000L + 1000L) / d
-    assert(got == Seq(
-      ("median", 1L, 4L, 4000L, imbMed),
-      ("zero", 1L, 4L, 4000L, imbZero)), s"got $got")
   }
 
   test("q298 temporal split: planted timeline lands exact cutoffs and entity reuse") {
@@ -3887,26 +3896,27 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q307 ppl gate: in-model heads admit at 1225; unseen-context heads cut at 2304") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_q307_spec").toString
-    // doc 0 (en, 20×'a') is the whole model: c2(a,a)=19, c1=19. Its head
-    // replays seen bigrams: s = L(531) − L(20) = 2313 − 1088 = 1225
-    // (admit ≤ 1540). doc 6 (fr, 14×'b') streams an unseen context:
-    // s = L(512) − L(1) = 2304 (cut). doc 3 (fr — outside the model) has
-    // id % 6 ≠ 0, so it never stages.
-    val a20 = (1 to 20).map(_ => "a").mkString(" ")
-    val b14 = (1 to 14).map(_ => "b").mkString(" ")
-    Seq((0L, "s0", "en", a20), (3L, "s0", "fr", "c c c"),
-      (6L, "s1", "fr", b14))
-      .toDF("doc_id", "source", "lang", "text")
-      .write.parquet(s"$work/documents.parquet")
-    val got = graft.analytics.PipelineQueries.streamPerplexityGate(spark, work)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getBoolean(5)))
-      .toSeq
-    assert(got == Seq(
-      (3000000L, "s0", 11L, 13475L, 1225L, true),
-      (3000006L, "s1", 11L, 25344L, 2304L, false)), s"got $got")
+    TestSpark.withTempDir("graft_q307_spec") { work =>
+      // doc 0 (en, 20×'a') is the whole model: c2(a,a)=19, c1=19. Its head
+      // replays seen bigrams: s = L(531) − L(20) = 2313 − 1088 = 1225
+      // (admit ≤ 1540). doc 6 (fr, 14×'b') streams an unseen context:
+      // s = L(512) − L(1) = 2304 (cut). doc 3 (fr — outside the model) has
+      // id % 6 ≠ 0, so it never stages.
+      val a20 = (1 to 20).map(_ => "a").mkString(" ")
+      val b14 = (1 to 14).map(_ => "b").mkString(" ")
+      Seq((0L, "s0", "en", a20), (3L, "s0", "fr", "c c c"),
+        (6L, "s1", "fr", b14))
+        .toDF("doc_id", "source", "lang", "text")
+        .write.parquet(s"$work/documents.parquet")
+      val got = graft.analytics.PipelineQueries.streamPerplexityGate(spark, work)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getBoolean(5)))
+        .toSeq
+      assert(got == Seq(
+        (3000000L, "s0", 11L, 13475L, 1225L, true),
+        (3000006L, "s1", 11L, 25344L, 2304L, false)), s"got $got")
+    }
   }
 
   test("q308 backoff: seen trigrams score the trigram term; unseen pay penalty + bigram") {
@@ -4069,51 +4079,53 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q282 boiler gate: banner-carrying streamed docs reject at 3333bp, clean heads admit") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_q282_spec").toString
-    def twenty(prefix: String) = (1 to 20).map(i => s"$prefix$i").mkString(" ")
-    // ids 0/7/14 feed the seed banner batch (banner df=3 => boilerplate);
-    // ids 0/10/15 stream (0 and 10 with banner, 15 clean); 3 is a bystander.
-    Seq(
-      (0L, "s0", twenty("a")), (3L, "s0", twenty("b")), (7L, "s1", twenty("c")),
-      (10L, "s1", twenty("d")), (14L, "s2", twenty("e")), (15L, "s2", twenty("f")))
-      .toDF("doc_id", "source", "text")
-      .write.parquet(s"$work/documents.parquet")
-    val got = graft.analytics.PipelineQueries.streamBoilerGate(spark, work)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getBoolean(5)))
-      .toSeq
-    assert(got == Seq(
-      (3000000L, "s0", 3L, 1L, 3333L, false),
-      (3000010L, "s1", 3L, 1L, 3333L, false),
-      (3000015L, "s2", 3L, 0L, 0L, true)), s"got $got")
+    TestSpark.withTempDir("graft_q282_spec") { work =>
+      def twenty(prefix: String) = (1 to 20).map(i => s"$prefix$i").mkString(" ")
+      // ids 0/7/14 feed the seed banner batch (banner df=3 => boilerplate);
+      // ids 0/10/15 stream (0 and 10 with banner, 15 clean); 3 is a bystander.
+      Seq(
+        (0L, "s0", twenty("a")), (3L, "s0", twenty("b")), (7L, "s1", twenty("c")),
+        (10L, "s1", twenty("d")), (14L, "s2", twenty("e")), (15L, "s2", twenty("f")))
+        .toDF("doc_id", "source", "text")
+        .write.parquet(s"$work/documents.parquet")
+      val got = graft.analytics.PipelineQueries.streamBoilerGate(spark, work)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getBoolean(5)))
+        .toSeq
+      assert(got == Seq(
+        (3000000L, "s0", 3L, 1L, 3333L, false),
+        (3000010L, "s1", 3L, 1L, 3333L, false),
+        (3000015L, "s2", 3L, 0L, 0L, true)), s"got $got")
+    }
   }
 
   test("q264 score store: a vanished corpus partition drops its score partition on sync") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val work = java.nio.file.Files.createTempDirectory("graft_q264_gc_spec").toString
-    val corpus = s"$work/corpus"
-    val docs = Seq(
-      (0L, "s0", "alpha beta"), (1L, "s0", "gamma delta"), (2L, "s1", "zeta eta"))
-      .toDF("doc_id", "source", "text")
-      .withColumn("part_id", pmod(col("doc_id"), lit(3L)))
-    docs.write.partitionBy("part_id").parquet(corpus)
-    val score = (slice: org.apache.spark.sql.DataFrame) =>
-      graft.analytics.PipelineQueries.classifierDocScores(slice)
-        .select(col("doc_id"), col("pred_class"), col("margin"))
-    graft.operators.ScoreStore.sync(spark, corpus, score)
-    val fs = new org.apache.hadoop.fs.Path(corpus)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$corpus/_scores/part_id=2")))
-    // The retention/GDPR event: corpus partition 2 is deleted out-of-band.
-    fs.delete(new org.apache.hadoop.fs.Path(s"$corpus/part_id=2"), true)
-    graft.operators.ScoreStore.sync(spark, corpus, score)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$corpus/_scores/part_id=2")),
-      "deletion must propagate into the derived score store")
-    val got = graft.operators.ScoreStore.read(spark, corpus)
-      .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq
-    assert(got == Seq(0L, 1L), s"store must hold exactly the surviving docs: $got")
+    TestSpark.withTempDir("graft_q264_gc_spec") { work =>
+      val corpus = s"$work/corpus"
+      val docs = Seq(
+        (0L, "s0", "alpha beta"), (1L, "s0", "gamma delta"), (2L, "s1", "zeta eta"))
+        .toDF("doc_id", "source", "text")
+        .withColumn("part_id", pmod(col("doc_id"), lit(3L)))
+      docs.write.partitionBy("part_id").parquet(corpus)
+      val score = (slice: org.apache.spark.sql.DataFrame) =>
+        graft.analytics.PipelineQueries.classifierDocScores(slice)
+          .select(col("doc_id"), col("pred_class"), col("margin"))
+      graft.operators.ScoreStore.sync(spark, corpus, score)
+      val fs = new org.apache.hadoop.fs.Path(corpus)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$corpus/_scores/part_id=2")))
+      // The retention/GDPR event: corpus partition 2 is deleted out-of-band.
+      fs.delete(new org.apache.hadoop.fs.Path(s"$corpus/part_id=2"), true)
+      graft.operators.ScoreStore.sync(spark, corpus, score)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$corpus/_scores/part_id=2")),
+        "deletion must propagate into the derived score store")
+      val got = graft.operators.ScoreStore.read(spark, corpus)
+        .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == Seq(0L, 1L), s"store must hold exactly the surviving docs: $got")
+    }
   }
 
   test("q318 harmonic centrality: on K3 all nodes tie and the telescoping collapses to round 1") {

@@ -49,10 +49,11 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("sorted range write produces partition-clustered parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sorted").toString
-    Scale.sortedWrite(Tables.events(spark, TestSpark.SfDir), s"$dir/ev", "ts", 4)
-    val back = spark.read.parquet(s"$dir/ev")
-    assert(back.count() == Tables.events(spark, TestSpark.SfDir).count())
+    TestSpark.withTempDir("graft_sorted") { dir =>
+      Scale.sortedWrite(Tables.events(spark, TestSpark.SfDir), s"$dir/ev", "ts", 4)
+      val back = spark.read.parquet(s"$dir/ev")
+      assert(back.count() == Tables.events(spark, TestSpark.SfDir).count())
+    }
   }
 
   test("dynamic partition pruning: a runtime subquery prunes fact partitions") {
@@ -60,26 +61,27 @@ class ScaleSpec extends AnyFunSuite {
     // column, dim carries a selective filter only known at runtime — DPP
     // turns the dim's broadcast into a partition filter on the fact scan
     // (dynamicpruningexpression), so excluded directories are never read.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
-    Scale.writePartitioned(
-      Tables.lineitem(spark, TestSpark.SfDir)
-        .select($"l_orderkey", $"l_quantity", $"l_returnflag"),
-      s"$dir/li", Seq("l_returnflag"))
-    val fact = spark.read.parquet(s"$dir/li")
-    // The dim must be a real source (a LocalRelation's filter constant-folds
-    // away and DPP sees no selective predicate to reuse).
-    Seq(("R", "returned"), ("A", "accepted"), ("N", "neither"))
-      .toDF("flag", "label")
-      .write.parquet(s"$dir/dim")
-    val dim = spark.read.parquet(s"$dir/dim")
-      .filter($"label" === "returned") // the selective runtime predicate
-    val joined = fact.join(dim, fact("l_returnflag") === dim("flag"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruningexpression"), plan)
-    // Semantics unchanged: DPP only prunes, never drops matching rows.
-    val want = fact.filter($"l_returnflag" === "R").count()
-    assert(joined.count() == want)
-    assert(want > 0)
+    TestSpark.withTempDir("graft_dpp") { dir =>
+      Scale.writePartitioned(
+        Tables.lineitem(spark, TestSpark.SfDir)
+          .select($"l_orderkey", $"l_quantity", $"l_returnflag"),
+        s"$dir/li", Seq("l_returnflag"))
+      val fact = spark.read.parquet(s"$dir/li")
+      // The dim must be a real source (a LocalRelation's filter constant-folds
+      // away and DPP sees no selective predicate to reuse).
+      Seq(("R", "returned"), ("A", "accepted"), ("N", "neither"))
+        .toDF("flag", "label")
+        .write.parquet(s"$dir/dim")
+      val dim = spark.read.parquet(s"$dir/dim")
+        .filter($"label" === "returned") // the selective runtime predicate
+      val joined = fact.join(dim, fact("l_returnflag") === dim("flag"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("dynamicpruningexpression"), plan)
+      // Semantics unchanged: DPP only prunes, never drops matching rows.
+      val want = fact.filter($"l_returnflag" === "R").count()
+      assert(joined.count() == want)
+      assert(want > 0)
+    }
   }
 
   test("runtime bloom filter: a selective dim injects might_contain into the fact scan") {
@@ -406,18 +408,19 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("partitioned layout prunes directories at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    val events = Tables.events(spark, TestSpark.SfDir)
-    Scale.writePartitioned(events, s"$dir/ev", Seq("event_type"))
-    val all = spark.read.parquet(s"$dir/ev")
-    val filtered = all.filter($"event_type" === "purchase")
-    // The filter lands in PartitionFilters (directory pruning)...
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") && plan.contains("event_type"), plan)
-    // ...and the layout is genuinely one directory per value: reading the
-    // single partition directory alone reproduces the filtered result.
-    val oneDir = spark.read.parquet(s"$dir/ev/event_type=purchase")
-    assert(oneDir.count() == events.filter($"event_type" === "purchase").count())
-    assert(filtered.count() == oneDir.count())
+    TestSpark.withTempDir("graft_part") { dir =>
+      val events = Tables.events(spark, TestSpark.SfDir)
+      Scale.writePartitioned(events, s"$dir/ev", Seq("event_type"))
+      val all = spark.read.parquet(s"$dir/ev")
+      val filtered = all.filter($"event_type" === "purchase")
+      // The filter lands in PartitionFilters (directory pruning)...
+      val plan = filtered.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [") && plan.contains("event_type"), plan)
+      // ...and the layout is genuinely one directory per value: reading the
+      // single partition directory alone reproduces the filtered result.
+      val oneDir = spark.read.parquet(s"$dir/ev/event_type=purchase")
+      assert(oneDir.count() == events.filter($"event_type" === "purchase").count())
+      assert(filtered.count() == oneDir.count())
+    }
   }
 }

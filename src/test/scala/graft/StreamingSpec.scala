@@ -133,97 +133,101 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming transitions chain across micro-batches via last-event state") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_trans_src")
-    // Two files → two micro-batches (maxFilesPerTrigger=1). u1's B→C edge
-    // and u2's A→B edge SPAN the batch boundary: only the persisted
-    // last-event state can produce them.
-    def stage(name: String, mtime: Long, rows: Seq[(Long, Long, String, String)]): Unit = {
-      val tmp = Files.createTempDirectory("graft_trans_batch").resolve("out").toString
-      spark.createDataFrame(rows).toDF("event_id", "user_id", "event_type", "tss")
-        .withColumn("ts", org.apache.spark.sql.functions.col("tss").cast("timestamp"))
-        .drop("tss")
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.toPath
-      val dst = dir.resolve(name)
-      Files.copy(part, dst)
-      dst.toFile.setLastModified(mtime)
-      ()
+    TestSpark.withTempDir("graft_trans") { root =>
+      val dir = Files.createDirectories(java.nio.file.Paths.get(root, "src"))
+      // Two files → two micro-batches (maxFilesPerTrigger=1). u1's B→C edge
+      // and u2's A→B edge SPAN the batch boundary: only the persisted
+      // last-event state can produce them.
+      def stage(name: String, mtime: Long, rows: Seq[(Long, Long, String, String)]): Unit = {
+        val tmp = java.nio.file.Paths.get(root, s"stage_$name").toString
+        spark.createDataFrame(rows).toDF("event_id", "user_id", "event_type", "tss")
+          .withColumn("ts", org.apache.spark.sql.functions.col("tss").cast("timestamp"))
+          .drop("tss")
+          .coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head.toPath
+        val dst = dir.resolve(name)
+        Files.copy(part, dst)
+        dst.toFile.setLastModified(mtime)
+        ()
+      }
+      stage("b1.parquet", 1000000L, Seq(
+        (1L, 1L, "view", "2024-01-01 00:00:00"),
+        (2L, 1L, "click", "2024-01-01 00:01:00"),
+        (3L, 2L, "signup", "2024-01-01 00:02:00")))
+      stage("b2.parquet", 2000000L, Seq(
+        (4L, 1L, "purchase", "2024-01-01 00:03:00"),
+        (5L, 2L, "login", "2024-01-01 00:04:00")))
+      val schema = spark.read.parquet(dir.toString).schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+      val pairs = StreamPipeline.runToMemory(
+        spark, StreamPipeline.transitionPairs(spark, stream).toDF(), "t_trans")
+        .as[(String, String)].collect().sorted
+      assert(pairs.toSeq == Seq(
+        ("click", "purchase"), // u1 cross-batch
+        ("signup", "login"),   // u2 cross-batch
+        ("view", "click")))    // u1 within batch 1
     }
-    stage("b1.parquet", 1000000L, Seq(
-      (1L, 1L, "view", "2024-01-01 00:00:00"),
-      (2L, 1L, "click", "2024-01-01 00:01:00"),
-      (3L, 2L, "signup", "2024-01-01 00:02:00")))
-    stage("b2.parquet", 2000000L, Seq(
-      (4L, 1L, "purchase", "2024-01-01 00:03:00"),
-      (5L, 2L, "login", "2024-01-01 00:04:00")))
-    val schema = spark.read.parquet(dir.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    val pairs = StreamPipeline.runToMemory(
-      spark, StreamPipeline.transitionPairs(spark, stream).toDF(), "t_trans")
-      .as[(String, String)].collect().sorted
-    assert(pairs.toSeq == Seq(
-      ("click", "purchase"), // u1 cross-batch
-      ("signup", "login"),   // u2 cross-batch
-      ("view", "click")))    // u1 within batch 1
   }
 
   test("incremental rollup: replaying the whole feed rewrites segments, never double-counts") {
     import java.nio.file.Files
     import graft.analytics.PipelineQueries
-    val work = Files.createTempDirectory("graft_rollup_spec")
-    val staged = work.resolve("incoming"); Files.createDirectories(staged)
-    val ev = Tables.events(spark, TestSpark.SfDir)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    (0 until 3).foreach { i =>
-      val tmp = Files.createTempDirectory("graft_rollup_spec_feed").resolve("out").toString
-      ev.filter(col("event_id") % 3 === i).coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
+    TestSpark.withTempDir("graft_rollup_spec") { root =>
+      val work = java.nio.file.Paths.get(root)
+      val staged = work.resolve("incoming"); Files.createDirectories(staged)
+      val ev = Tables.events(spark, TestSpark.SfDir)
+        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+      (0 until 3).foreach { i =>
+        val tmp = work.resolve(s"feed$i").toString
+        ev.filter(col("event_id") % 3 === i).coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head.toPath
+        val dst = staged.resolve(s"b$i.parquet")
+        Files.copy(part, dst); dst.toFile.setLastModified(1000000L * (i + 1)); ()
+      }
+      val rollup = s"$work/rollup"
+      def view() = spark.read.parquet(rollup)
+        .groupBy(col("day"), col("event_type"))
+        .agg(sum(col("n")).as("n"), sum(col("value_cents")).as("c"))
+        .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getLong(3)))
+        .sortBy(r => (r._1, r._2)).toSeq
+      PipelineQueries.rollupIngest(spark, staged.toString, rollup, s"$work/_cp1")
+      val first = view()
+      assert(spark.read.parquet(rollup).select("batch_id").distinct().count() == 3,
+        "the feed must actually arrive as three micro-batch segments")
+      // Full replay with a FRESH checkpoint: batch ids 0..2 recur, each
+      // segment is dynamic-partition-overwritten with identical content.
+      PipelineQueries.rollupIngest(spark, staged.toString, rollup, s"$work/_cp2")
+      assert(view() == first, "replay double-counted the rollup")
+      // And the compacted view equals the one-shot batch aggregate.
+      def batchAgg(d: org.apache.spark.sql.DataFrame) = d
+        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("c"))
+        .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getLong(3)))
+        .sortBy(r => (r._1, r._2)).toSeq
+      assert(first == batchAgg(ev))
+      // TRUE incrementality: a fourth file lands, the ORIGINAL checkpoint
+      // resumes — only the delta becomes a new segment (no reprocessing),
+      // and the view advances by exactly that delta.
+      val extra = Tables.events(spark, TestSpark.SfDir)
+        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+        .filter(col("event_id") % 3 === 0) // a replayed-content feed file is fine: segments key on batch_id
+        .limit(500)
+      val tmp4 = work.resolve("feed3").toString
+      extra.coalesce(1).write.parquet(tmp4)
+      val part4 = new java.io.File(tmp4).listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath
-      val dst = staged.resolve(s"b$i.parquet")
-      Files.copy(part, dst); dst.toFile.setLastModified(1000000L * (i + 1)); ()
+      val dst4 = staged.resolve("b3.parquet")
+      Files.copy(part4, dst4); dst4.toFile.setLastModified(4000000L)
+      PipelineQueries.rollupIngest(spark, staged.toString, rollup, s"$work/_cp1")
+      assert(spark.read.parquet(rollup).select("batch_id").distinct().count() == 4,
+        "resuming the original checkpoint must add exactly one new segment")
+      val expected = batchAgg(ev.unionByName(spark.read.parquet(dst4.toString)))
+      assert(view() == expected, "the view must advance by exactly the delta")
     }
-    val rollup = s"$work/rollup"
-    def view() = spark.read.parquet(rollup)
-      .groupBy(col("day"), col("event_type"))
-      .agg(sum(col("n")).as("n"), sum(col("value_cents")).as("c"))
-      .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getLong(3)))
-      .sortBy(r => (r._1, r._2)).toSeq
-    PipelineQueries.rollupIngest(spark, staged.toString, rollup, s"$work/_cp1")
-    val first = view()
-    assert(spark.read.parquet(rollup).select("batch_id").distinct().count() == 3,
-      "the feed must actually arrive as three micro-batch segments")
-    // Full replay with a FRESH checkpoint: batch ids 0..2 recur, each
-    // segment is dynamic-partition-overwritten with identical content.
-    PipelineQueries.rollupIngest(spark, staged.toString, rollup, s"$work/_cp2")
-    assert(view() == first, "replay double-counted the rollup")
-    // And the compacted view equals the one-shot batch aggregate.
-    def batchAgg(d: org.apache.spark.sql.DataFrame) = d
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("c"))
-      .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getLong(3)))
-      .sortBy(r => (r._1, r._2)).toSeq
-    assert(first == batchAgg(ev))
-    // TRUE incrementality: a fourth file lands, the ORIGINAL checkpoint
-    // resumes — only the delta becomes a new segment (no reprocessing),
-    // and the view advances by exactly that delta.
-    val extra = Tables.events(spark, TestSpark.SfDir)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      .filter(col("event_id") % 3 === 0) // a replayed-content feed file is fine: segments key on batch_id
-      .limit(500)
-    val tmp4 = Files.createTempDirectory("graft_rollup_spec_feed").resolve("out").toString
-    extra.coalesce(1).write.parquet(tmp4)
-    val part4 = new java.io.File(tmp4).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head.toPath
-    val dst4 = staged.resolve("b3.parquet")
-    Files.copy(part4, dst4); dst4.toFile.setLastModified(4000000L)
-    PipelineQueries.rollupIngest(spark, staged.toString, rollup, s"$work/_cp1")
-    assert(spark.read.parquet(rollup).select("batch_id").distinct().count() == 4,
-      "resuming the original checkpoint must add exactly one new segment")
-    val expected = batchAgg(ev.unionByName(spark.read.parquet(dst4.toString)))
-    assert(view() == expected, "the view must advance by exactly the delta")
   }
 
   test("stream-static enrich joins a broadcast dim per micro-batch") {
@@ -510,41 +514,42 @@ class StreamingSpec extends AnyFunSuite {
     // appended by PREVIOUS batches — the corpus, not driver memory, is the
     // durable truth.
     import graft.dedup.IncrementalDedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_restart").toString
-    val corpusDir = s"$dir/corpus"
-    Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-      .select($"doc_id", $"text", md5($"text").as("fp"), lit(-1L).as("batch_id"))
-      .write.partitionBy("batch_id").parquet(corpusDir)
+    TestSpark.withTempDir("graft_ingest_restart") { dir =>
+      val corpusDir = s"$dir/corpus"
+      Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
+        .select($"doc_id", $"text", md5($"text").as("fp"), lit(-1L).as("batch_id"))
+        .write.partitionBy("batch_id").parquet(corpusDir)
 
-    val ms = MemoryStream[(Long, String)](spark)
-    val stream = ms.toDF().toDF("doc_id", "text")
-    def start() = IncrementalDedup.streamingIngest(
-      stream, corpusDir, "doc_id", md5(col("text")),
-      checkpoint = s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      val ms = MemoryStream[(Long, String)](spark)
+      val stream = ms.toDF().toDF("doc_id", "text")
+      def start() = IncrementalDedup.streamingIngest(
+        stream, corpusDir, "doc_id", md5(col("text")),
+        checkpoint = s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
 
-    // gamma = fresh; alpha = snapshot dup; delta×2 = in-batch dup (keeper 12).
-    ms.addData(Seq((10L, "gamma"), (11L, "alpha"), (12L, "delta"), (13L, "delta")))
-    val q1 = start(); q1.processAllAvailable(); q1.stop()
-    assert(spark.read.parquet(corpusDir).where($"batch_id" >= 0)
-      .select("doc_id").as[Long].collect().toSet == Set(10L, 12L))
+      // gamma = fresh; alpha = snapshot dup; delta×2 = in-batch dup (keeper 12).
+      ms.addData(Seq((10L, "gamma"), (11L, "alpha"), (12L, "delta"), (13L, "delta")))
+      val q1 = start(); q1.processAllAvailable(); q1.stop()
+      assert(spark.read.parquet(corpusDir).where($"batch_id" >= 0)
+        .select("doc_id").as[Long].collect().toSet == Set(10L, 12L))
 
-    // Restart from the same checkpoint. gamma = dup of a batch-1 survivor,
-    // beta = snapshot dup, epsilon = fresh.
-    ms.addData(Seq((20L, "gamma"), (21L, "beta"), (22L, "epsilon")))
-    val q2 = start(); q2.processAllAvailable()
+      // Restart from the same checkpoint. gamma = dup of a batch-1 survivor,
+      // beta = snapshot dup, epsilon = fresh.
+      ms.addData(Seq((20L, "gamma"), (21L, "beta"), (22L, "epsilon")))
+      val q2 = start(); q2.processAllAvailable()
 
-    // Third batch in the SAME run, after the run's refresh point: its dup
-    // target (epsilon) was appended post-refresh, so the verification must
-    // see it via the sketch fold + the partition-pruned fresh tail — the
-    // path that avoids a per-batch full corpus rescan.
-    ms.addData(Seq((30L, "epsilon"), (31L, "zeta")))
-    q2.processAllAvailable(); q2.stop()
+      // Third batch in the SAME run, after the run's refresh point: its dup
+      // target (epsilon) was appended post-refresh, so the verification must
+      // see it via the sketch fold + the partition-pruned fresh tail — the
+      // path that avoids a per-batch full corpus rescan.
+      ms.addData(Seq((30L, "epsilon"), (31L, "zeta")))
+      q2.processAllAvailable(); q2.stop()
 
-    val published = spark.read.parquet(corpusDir)
-    assert(published.count() == published.select("fp").distinct().count()) // zero dupes anywhere
-    assert(published.where($"batch_id" >= 0)
-      .select("doc_id").as[Long].collect().toSet == Set(10L, 12L, 22L, 31L))
+      val published = spark.read.parquet(corpusDir)
+      assert(published.count() == published.select("fp").distinct().count()) // zero dupes anywhere
+      assert(published.where($"batch_id" >= 0)
+        .select("doc_id").as[Long].collect().toSet == Set(10L, 12L, 22L, 31L))
+    }
   }
 
   test("q151 upsert state: later batches overwrite, older arrivals don't, tombstones drop") {
@@ -596,73 +601,75 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("q200 fuzzy ingest: within-batch dominance, corpus match, and cross-batch carry") {
-    val work = java.nio.file.Files.createTempDirectory("graft_fuzzy_spec").toString
-    val corpus = s"$work/corpus"
-    // Standing corpus: doc 100.
-    Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
-      .write.partitionBy("batch_id").parquet(corpus)
-    val ms = MemoryStream[(Long, String)](spark)
-    val q = graft.dedup.IncrementalDedup.streamingFuzzyIngest(
-      ms.toDF().toDF("doc_id", "text"), corpus, s"$work/_ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    // Batch 1: docs 1 and 2 are 0.8-Jaccard twins → 2 dominated by 1.
-    ms.addData(Seq((1L, "x y z w"), (2L, "x y z w v")))
-    q.processAllAvailable()
-    // Batch 2: 3 matches the STANDING corpus (dropped), 4 is fresh
-    // (kept), 5 duplicates batch-1 SURVIVOR 1 (dropped — cross-batch
-    // carry through the published partitions).
-    ms.addData(Seq((3L, "p q r s t"), (4L, "a b c d"), (5L, "x y z w")))
-    q.processAllAvailable(); q.stop()
-    val got = spark.read.parquet(corpus).where(col("batch_id") >= 0)
-      .select(col("batch_id").cast("long"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(got.toSeq == Seq((0L, 1L), (1L, 4L)))
+    TestSpark.withTempDir("graft_fuzzy_spec") { work =>
+      val corpus = s"$work/corpus"
+      // Standing corpus: doc 100.
+      Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
+        .write.partitionBy("batch_id").parquet(corpus)
+      val ms = MemoryStream[(Long, String)](spark)
+      val q = graft.dedup.IncrementalDedup.streamingFuzzyIngest(
+        ms.toDF().toDF("doc_id", "text"), corpus, s"$work/_ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      // Batch 1: docs 1 and 2 are 0.8-Jaccard twins → 2 dominated by 1.
+      ms.addData(Seq((1L, "x y z w"), (2L, "x y z w v")))
+      q.processAllAvailable()
+      // Batch 2: 3 matches the STANDING corpus (dropped), 4 is fresh
+      // (kept), 5 duplicates batch-1 SURVIVOR 1 (dropped — cross-batch
+      // carry through the published partitions).
+      ms.addData(Seq((3L, "p q r s t"), (4L, "a b c d"), (5L, "x y z w")))
+      q.processAllAvailable(); q.stop()
+      val got = spark.read.parquet(corpus).where(col("batch_id") >= 0)
+        .select(col("batch_id").cast("long"), col("doc_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+      assert(got.toSeq == Seq((0L, 1L), (1L, 4L)))
+    }
   }
 
   test("q256 compaction: probes read base+deltas bit-identically; a stale base falls back") {
     // Two identical work dirs; only A compacts — every subsequent ingest
     // must publish the SAME survivors from either read path.
-    def mkCorpus(): String = {
-      val corpus = java.nio.file.Files
-        .createTempDirectory("graft_sig_compact_spec").toString + "/corpus"
-      Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
-        .write.partitionBy("batch_id").parquet(corpus)
-      graft.dedup.IncrementalDedup.fuzzyIngestBatch(
-        Seq((1L, "x y z w")).toDF("doc_id", "text"), corpus, 0L)
-      corpus
+    TestSpark.withTempDir("graft_sig_compact_spec") { work =>
+      def mkCorpus(tag: String): String = {
+        val corpus = s"$work/$tag/corpus"
+        Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
+          .write.partitionBy("batch_id").parquet(corpus)
+        graft.dedup.IncrementalDedup.fuzzyIngestBatch(
+          Seq((1L, "x y z w")).toDF("doc_id", "text"), corpus, 0L)
+        corpus
+      }
+      def published(c: String) = spark.read.parquet(c).where(col("batch_id") >= 0)
+        .select(col("batch_id").cast("long"), col("doc_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val corpusA = mkCorpus("a")
+      val corpusB = mkCorpus("b")
+      graft.dedup.IncrementalDedup.compactSigStore(spark, corpusA)
+      // The base holds exactly 48 band rows per corpus doc (seed + survivor).
+      assert(spark.read.parquet(s"$corpusA/_fuzzy_sigs/_base").count() == 2L * 48L)
+      // Batch 1: doc 5 twins the batch-0 SURVIVOR (must drop via the BASE
+      // read on A, the per-batch read on B); doc 6 is fresh.
+      val b1 = Seq((5L, "x y z w"), (6L, "a b c d")).toDF("doc_id", "text")
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(b1, corpusA, 1L)
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(b1, corpusB, 1L)
+      assert(published(corpusA) == published(corpusB))
+      assert(published(corpusA) == Seq((0L, 1L), (1L, 6L)))
+      // Re-compact A (folds −1/0/1), then edit a FOLDED corpus partition
+      // out-of-band: the digest diverges from the manifest, so the base
+      // must be ignored wholesale — the re-signed per-batch layout decides.
+      graft.dedup.IncrementalDedup.compactSigStore(spark, corpusA)
+      Seq(corpusA, corpusB).foreach { c =>
+        Seq((201L, "q w e r", 0L)).toDF("doc_id", "text", "batch_id")
+          .write.mode("append").partitionBy("batch_id").parquet(c)
+      }
+      // Doc 7 twins the out-of-band doc (Jaccard 4/5 = 0.8): only the
+      // re-signed store can drop it. Doc 8 is fresh.
+      val b2 = Seq((7L, "q w e r t"), (8L, "f g h i")).toDF("doc_id", "text")
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(b2, corpusA, 2L)
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(b2, corpusB, 2L)
+      assert(published(corpusA) == published(corpusB))
+      // The out-of-band doc 201 sits in batch 0's partition, so it reads
+      // back as published; 7 dropped against it, 8 survived.
+      assert(published(corpusA) == Seq((0L, 1L), (0L, 201L), (1L, 6L), (2L, 8L)))
     }
-    def published(c: String) = spark.read.parquet(c).where(col("batch_id") >= 0)
-      .select(col("batch_id").cast("long"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val corpusA = mkCorpus()
-    val corpusB = mkCorpus()
-    graft.dedup.IncrementalDedup.compactSigStore(spark, corpusA)
-    // The base holds exactly 48 band rows per corpus doc (seed + survivor).
-    assert(spark.read.parquet(s"$corpusA/_fuzzy_sigs/_base").count() == 2L * 48L)
-    // Batch 1: doc 5 twins the batch-0 SURVIVOR (must drop via the BASE
-    // read on A, the per-batch read on B); doc 6 is fresh.
-    val b1 = Seq((5L, "x y z w"), (6L, "a b c d")).toDF("doc_id", "text")
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(b1, corpusA, 1L)
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(b1, corpusB, 1L)
-    assert(published(corpusA) == published(corpusB))
-    assert(published(corpusA) == Seq((0L, 1L), (1L, 6L)))
-    // Re-compact A (folds −1/0/1), then edit a FOLDED corpus partition
-    // out-of-band: the digest diverges from the manifest, so the base
-    // must be ignored wholesale — the re-signed per-batch layout decides.
-    graft.dedup.IncrementalDedup.compactSigStore(spark, corpusA)
-    Seq(corpusA, corpusB).foreach { c =>
-      Seq((201L, "q w e r", 0L)).toDF("doc_id", "text", "batch_id")
-        .write.mode("append").partitionBy("batch_id").parquet(c)
-    }
-    // Doc 7 twins the out-of-band doc (Jaccard 4/5 = 0.8): only the
-    // re-signed store can drop it. Doc 8 is fresh.
-    val b2 = Seq((7L, "q w e r t"), (8L, "f g h i")).toDF("doc_id", "text")
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(b2, corpusA, 2L)
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(b2, corpusB, 2L)
-    assert(published(corpusA) == published(corpusB))
-    // The out-of-band doc 201 sits in batch 0's partition, so it reads
-    // back as published; 7 dropped against it, 8 survived.
-    assert(published(corpusA) == Seq((0L, 1L), (0L, 201L), (1L, 6L), (2L, 8L)))
   }
 
   test("q200 lifecycle: ingest auto-compacts past the delta threshold; replay stays idempotent") {
@@ -670,44 +677,45 @@ class StreamingSpec extends AnyFunSuite {
     // operator, so a long-running ingest accumulated one store partition
     // per batch. The ingest now folds the store itself once the deltas not
     // covered by the base manifest reach `autoCompactDeltas`.
-    val work = java.nio.file.Files.createTempDirectory("graft_fuzzy_autocompact").toString
-    val corpus = s"$work/corpus"
-    Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
-      .write.partitionBy("batch_id").parquet(corpus)
-    val fs = new org.apache.hadoop.fs.Path(corpus)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val basePath = new org.apache.hadoop.fs.Path(s"$corpus/_fuzzy_sigs/_base")
-    def manifest = graft.dedup.IncrementalDedup.readStateFile(
-      fs, s"$corpus/_fuzzy_sigs", "_base_manifest")
-    // Threshold 3 through the STREAMING wrapper: after stream batch 0 the
-    // store holds {-1, 0} (2 residual deltas → below threshold, no base);
-    // after stream batch 1 it holds 3 → the ingest compacts itself.
-    val ms = MemoryStream[(Long, String)](spark)
-    val q = graft.dedup.IncrementalDedup.streamingFuzzyIngest(
-      ms.toDF().toDF("doc_id", "text"), corpus, s"$work/_ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
-      autoCompactDeltas = 3)
-    ms.addData(Seq((1L, "x y z w")))
-    q.processAllAvailable()
-    assert(!fs.exists(basePath), "compacted below threshold")
-    ms.addData(Seq((4L, "a b c d")))
-    q.processAllAvailable(); q.stop()
-    assert(fs.exists(basePath), "threshold crossed but no auto-compaction ran")
-    assert(manifest.keySet == Set(-1L, 0L, 1L), s"manifest covers $manifest")
-    // The base serves the next batch's probes: doc 5 twins the batch-0
-    // survivor (dropped via the BASE read), doc 6 is fresh.
-    val b2 = Seq((5L, "x y z w"), (6L, "f g h i")).toDF("doc_id", "text")
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(b2, corpus, 2L)
-    def published = spark.read.parquet(corpus).where(col("batch_id") >= 0)
-      .select(col("batch_id").cast("long"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(published == Seq((0L, 1L), (1L, 4L), (2L, 6L)))
-    // Replay of batch 2 against the compacted store: identical survivors,
-    // and the base manifest is still honored (batch 2 is a residual delta,
-    // not an invalidation).
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(b2, corpus, 2L)
-    assert(published == Seq((0L, 1L), (1L, 4L), (2L, 6L)))
-    assert(manifest.keySet == Set(-1L, 0L, 1L))
+    TestSpark.withTempDir("graft_fuzzy_autocompact") { work =>
+      val corpus = s"$work/corpus"
+      Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
+        .write.partitionBy("batch_id").parquet(corpus)
+      val fs = new org.apache.hadoop.fs.Path(corpus)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val basePath = new org.apache.hadoop.fs.Path(s"$corpus/_fuzzy_sigs/_base")
+      def manifest = graft.dedup.IncrementalDedup.readStateFile(
+        fs, s"$corpus/_fuzzy_sigs", "_base_manifest")
+      // Threshold 3 through the STREAMING wrapper: after stream batch 0 the
+      // store holds {-1, 0} (2 residual deltas → below threshold, no base);
+      // after stream batch 1 it holds 3 → the ingest compacts itself.
+      val ms = MemoryStream[(Long, String)](spark)
+      val q = graft.dedup.IncrementalDedup.streamingFuzzyIngest(
+        ms.toDF().toDF("doc_id", "text"), corpus, s"$work/_ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
+        autoCompactDeltas = 3)
+      ms.addData(Seq((1L, "x y z w")))
+      q.processAllAvailable()
+      assert(!fs.exists(basePath), "compacted below threshold")
+      ms.addData(Seq((4L, "a b c d")))
+      q.processAllAvailable(); q.stop()
+      assert(fs.exists(basePath), "threshold crossed but no auto-compaction ran")
+      assert(manifest.keySet == Set(-1L, 0L, 1L), s"manifest covers $manifest")
+      // The base serves the next batch's probes: doc 5 twins the batch-0
+      // survivor (dropped via the BASE read), doc 6 is fresh.
+      val b2 = Seq((5L, "x y z w"), (6L, "f g h i")).toDF("doc_id", "text")
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(b2, corpus, 2L)
+      def published = spark.read.parquet(corpus).where(col("batch_id") >= 0)
+        .select(col("batch_id").cast("long"), col("doc_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      assert(published == Seq((0L, 1L), (1L, 4L), (2L, 6L)))
+      // Replay of batch 2 against the compacted store: identical survivors,
+      // and the base manifest is still honored (batch 2 is a residual delta,
+      // not an invalidation).
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(b2, corpus, 2L)
+      assert(published == Seq((0L, 1L), (1L, 4L), (2L, 6L)))
+      assert(manifest.keySet == Set(-1L, 0L, 1L))
+    }
   }
 
   test("q256 torn compaction: a base without _SUCCESS is never trusted and self-heals") {
@@ -721,33 +729,34 @@ class StreamingSpec extends AnyFunSuite {
     // _SUCCESS (the observable state of a torn rewrite) must route probes
     // to the per-batch layout, keep survivors identical, and let the next
     // ingest's auto-compaction repair the base.
-    val corpus = java.nio.file.Files
-      .createTempDirectory("graft_sig_torn_spec").toString + "/corpus"
-    Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
-      .write.partitionBy("batch_id").parquet(corpus)
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(
-      Seq((1L, "x y z w")).toDF("doc_id", "text"), corpus, 0L)
-    graft.dedup.IncrementalDedup.compactSigStore(spark, corpus)
-    val fs = new org.apache.hadoop.fs.Path(corpus)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val success = new org.apache.hadoop.fs.Path(s"$corpus/_fuzzy_sigs/_base/_SUCCESS")
-    assert(fs.exists(success), "compaction committed a base")
-    fs.delete(success, false) // the torn-rewrite observable
-    // Doc 5 twins the batch-0 survivor: it must still drop — via the
-    // per-batch fallback, never the damaged base. Doc 6 is fresh.
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(
-      Seq((5L, "x y z w"), (6L, "a b c d")).toDF("doc_id", "text"), corpus, 1L,
-      autoCompactDeltas = 2)
-    val published = spark.read.parquet(corpus).where(col("batch_id") >= 0)
-      .select(col("batch_id").cast("long"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(published == Seq((0L, 1L), (1L, 6L)))
-    // An invalid base counts the WHOLE store as residual (3 ≥ threshold 2),
-    // so the same ingest re-compacted: base committed again, manifest
-    // covering every batch.
-    assert(fs.exists(success), "auto-compaction repaired the torn base")
-    assert(graft.dedup.IncrementalDedup.readStateFile(
-      fs, s"$corpus/_fuzzy_sigs", "_base_manifest").keySet == Set(-1L, 0L, 1L))
+    TestSpark.withTempDir("graft_sig_torn_spec") { work =>
+      val corpus = s"$work/corpus"
+      Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
+        .write.partitionBy("batch_id").parquet(corpus)
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(
+        Seq((1L, "x y z w")).toDF("doc_id", "text"), corpus, 0L)
+      graft.dedup.IncrementalDedup.compactSigStore(spark, corpus)
+      val fs = new org.apache.hadoop.fs.Path(corpus)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val success = new org.apache.hadoop.fs.Path(s"$corpus/_fuzzy_sigs/_base/_SUCCESS")
+      assert(fs.exists(success), "compaction committed a base")
+      fs.delete(success, false) // the torn-rewrite observable
+      // Doc 5 twins the batch-0 survivor: it must still drop — via the
+      // per-batch fallback, never the damaged base. Doc 6 is fresh.
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(
+        Seq((5L, "x y z w"), (6L, "a b c d")).toDF("doc_id", "text"), corpus, 1L,
+        autoCompactDeltas = 2)
+      val published = spark.read.parquet(corpus).where(col("batch_id") >= 0)
+        .select(col("batch_id").cast("long"), col("doc_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      assert(published == Seq((0L, 1L), (1L, 6L)))
+      // An invalid base counts the WHOLE store as residual (3 ≥ threshold 2),
+      // so the same ingest re-compacted: base committed again, manifest
+      // covering every batch.
+      assert(fs.exists(success), "auto-compaction repaired the torn base")
+      assert(graft.dedup.IncrementalDedup.readStateFile(
+        fs, s"$corpus/_fuzzy_sigs", "_base_manifest").keySet == Set(-1L, 0L, 1L))
+    }
   }
 
   test("q256 torn manifest: an unparseable state file reads as absent and probes fall back") {
@@ -759,66 +768,68 @@ class StreamingSpec extends AnyFunSuite {
     // .tmp behind; (b) a manifest torn mid-line (no '=') reads as
     // Map.empty, so baseValid routes probes to the per-batch fallback
     // instead of crashing, and the next compaction self-heals it.
-    val corpus = java.nio.file.Files
-      .createTempDirectory("graft_sig_torn_manifest").toString + "/corpus"
-    Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
-      .write.partitionBy("batch_id").parquet(corpus)
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(
-      Seq((1L, "x y z w")).toDF("doc_id", "text"), corpus, 0L)
-    graft.dedup.IncrementalDedup.compactSigStore(spark, corpus)
-    val fs = new org.apache.hadoop.fs.Path(corpus)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sigDir = s"$corpus/_fuzzy_sigs"
-    val manifestPath = new org.apache.hadoop.fs.Path(sigDir, "_base_manifest")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(sigDir, "_base_manifest.tmp")),
-      "temp+rename publish leaves no .tmp behind")
-    assert(graft.dedup.IncrementalDedup.readStateFile(
-      fs, sigDir, "_base_manifest").nonEmpty, "compaction committed a manifest")
-    // Tear the manifest: truncate the file mid-line so the last line has
-    // no '=' — the observable state of a crash mid-publish on a filesystem
-    // without atomic visibility.
-    val in = fs.open(manifestPath)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val torn = txt.substring(0, txt.lastIndexOf('=') max 1)
-    val out = fs.create(manifestPath, true)
-    try out.write(torn.getBytes("UTF-8")) finally out.close()
-    assert(graft.dedup.IncrementalDedup.readStateFile(
-      fs, sigDir, "_base_manifest").isEmpty,
-      "a torn manifest reads as absent, not a crash")
-    // The probe path must not crash and must still dedup via the
-    // per-batch fallback: doc 5 twins the batch-0 survivor → dropped.
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(
-      Seq((5L, "x y z w"), (6L, "a b c d")).toDF("doc_id", "text"), corpus, 1L)
-    val published = spark.read.parquet(corpus).where(col("batch_id") >= 0)
-      .select(col("batch_id").cast("long"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(published == Seq((0L, 1L), (1L, 6L)))
-    // Re-compaction republishes a clean manifest over the torn one.
-    graft.dedup.IncrementalDedup.compactSigStore(spark, corpus)
-    assert(graft.dedup.IncrementalDedup.readStateFile(
-      fs, sigDir, "_base_manifest").keySet == Set(-1L, 0L, 1L))
+    TestSpark.withTempDir("graft_sig_torn_manifest") { work =>
+      val corpus = s"$work/corpus"
+      Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
+        .write.partitionBy("batch_id").parquet(corpus)
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(
+        Seq((1L, "x y z w")).toDF("doc_id", "text"), corpus, 0L)
+      graft.dedup.IncrementalDedup.compactSigStore(spark, corpus)
+      val fs = new org.apache.hadoop.fs.Path(corpus)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val sigDir = s"$corpus/_fuzzy_sigs"
+      val manifestPath = new org.apache.hadoop.fs.Path(sigDir, "_base_manifest")
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(sigDir, "_base_manifest.tmp")),
+        "temp+rename publish leaves no .tmp behind")
+      assert(graft.dedup.IncrementalDedup.readStateFile(
+        fs, sigDir, "_base_manifest").nonEmpty, "compaction committed a manifest")
+      // Tear the manifest: truncate the file mid-line so the last line has
+      // no '=' — the observable state of a crash mid-publish on a filesystem
+      // without atomic visibility.
+      val in = fs.open(manifestPath)
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val torn = txt.substring(0, txt.lastIndexOf('=') max 1)
+      val out = fs.create(manifestPath, true)
+      try out.write(torn.getBytes("UTF-8")) finally out.close()
+      assert(graft.dedup.IncrementalDedup.readStateFile(
+        fs, sigDir, "_base_manifest").isEmpty,
+        "a torn manifest reads as absent, not a crash")
+      // The probe path must not crash and must still dedup via the
+      // per-batch fallback: doc 5 twins the batch-0 survivor → dropped.
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(
+        Seq((5L, "x y z w"), (6L, "a b c d")).toDF("doc_id", "text"), corpus, 1L)
+      val published = spark.read.parquet(corpus).where(col("batch_id") >= 0)
+        .select(col("batch_id").cast("long"), col("doc_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      assert(published == Seq((0L, 1L), (1L, 6L)))
+      // Re-compaction republishes a clean manifest over the torn one.
+      graft.dedup.IncrementalDedup.compactSigStore(spark, corpus)
+      assert(graft.dedup.IncrementalDedup.readStateFile(
+        fs, sigDir, "_base_manifest").keySet == Set(-1L, 0L, 1L))
+    }
   }
 
   test("q200 replay guard: a zero-survivor replay clears the stale partition") {
     // Round-6 advice: DPO writes no partition for an empty frame, so a
     // replay that legitimately derives zero survivors (the corpus grew
     // between the original run and the replay) must truncate explicitly.
-    val work = java.nio.file.Files.createTempDirectory("graft_fuzzy_replay").toString
-    val corpus = s"$work/corpus"
-    Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
-      .write.partitionBy("batch_id").parquet(corpus)
-    // Original run of batch 0: doc 1 is fresh → published.
-    val b = Seq((1L, "x y z w")).toDF("doc_id", "text")
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(b, corpus, 0L)
-    assert(spark.read.parquet(corpus).where(col("batch_id") === 0).count() == 1)
-    // The corpus then gains an exact twin of doc 1 in another batch; a
-    // replay of batch 0 now derives ZERO survivors — the stale batch-0
-    // partition must come out, not linger.
-    Seq((50L, "x y z w", 1L)).toDF("doc_id", "text", "batch_id")
-      .write.mode("append").partitionBy("batch_id").parquet(corpus)
-    graft.dedup.IncrementalDedup.fuzzyIngestBatch(b, corpus, 0L)
-    assert(spark.read.parquet(corpus).where(col("batch_id") === 0).count() == 0)
-    assert(spark.read.parquet(corpus).select(col("doc_id")).as[Long]
-      .collect().toSet == Set(100L, 50L))
+    TestSpark.withTempDir("graft_fuzzy_replay") { work =>
+      val corpus = s"$work/corpus"
+      Seq((100L, "p q r s", -1L)).toDF("doc_id", "text", "batch_id")
+        .write.partitionBy("batch_id").parquet(corpus)
+      // Original run of batch 0: doc 1 is fresh → published.
+      val b = Seq((1L, "x y z w")).toDF("doc_id", "text")
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(b, corpus, 0L)
+      assert(spark.read.parquet(corpus).where(col("batch_id") === 0).count() == 1)
+      // The corpus then gains an exact twin of doc 1 in another batch; a
+      // replay of batch 0 now derives ZERO survivors — the stale batch-0
+      // partition must come out, not linger.
+      Seq((50L, "x y z w", 1L)).toDF("doc_id", "text", "batch_id")
+        .write.mode("append").partitionBy("batch_id").parquet(corpus)
+      graft.dedup.IncrementalDedup.fuzzyIngestBatch(b, corpus, 0L)
+      assert(spark.read.parquet(corpus).where(col("batch_id") === 0).count() == 0)
+      assert(spark.read.parquet(corpus).select(col("doc_id")).as[Long]
+        .collect().toSet == Set(100L, 50L))
+    }
   }
 }

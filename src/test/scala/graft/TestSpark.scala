@@ -48,4 +48,26 @@ object TestSpark {
       (out, n)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result and the commands (argv joined by spaces) of the child
+    * processes this JVM started while it ran, from a JFR recording of
+    * `jdk.ProcessStart` events. Any thread's process starts count. */
+  def processesStartedBy[T](body: => T): (T, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    val dump = java.nio.file.Files.createTempFile("graft_jfr", ".jfr")
+    try {
+      recording.start()
+      val out = try body finally recording.stop()
+      recording.dump(dump)
+      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command")).toSeq
+      (out, commands)
+    } finally {
+      recording.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
+  }
 }
