@@ -25,6 +25,20 @@ import graft.Tables
   * (object linearization order in PipelineQueries.scala). */
 trait PipelineQueriesGraph { this: PipelineQueries.type =>
 
+  /** The degree-annotated symmetric purchase graph, one cache per
+    * (session, dir) — shared by q139, q149 and q245. */
+  private def purchaseSymDeg(spark: SparkSession, dir: String): DataFrame = {
+    import graft.graph.Graph
+    graft.SessionMemo.frame(spark, s"q139symdeg|$dir")(Graph.symmetricWithDegrees(
+      Graph.purchaseEdges(Tables.orders(spark, dir), Tables.lineitem(spark, dir))))
+  }
+
+  /** Min-label communities of the purchase graph — shared by q149 and q245. */
+  private def purchaseLabels(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.memo(spark, s"q149labels|$dir") {
+      graft.graph.Graph.labelPropagation(purchaseSymDeg(spark, dir))
+    }
+
   /** PageRank over the purchase graph (q139) — iterative link analysis,
     * the source-authority prior of web-corpus curation (site-level
     * PageRank over the link graph is a standard quality signal for
@@ -40,22 +54,14 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
     * associative and the DuckDB oracle replays the exact iteration
     * unrolled. The top-20 cut is TakeOrderedAndProject, never a global
     * sort. */
-  def pageRankPurchases(spark: SparkSession, dir: String): DataFrame = {
-    import graft.graph.Graph
-    val symDeg = graft.SessionMemo.memo(spark, s"q139symdeg|$dir") {
-      val s = Graph.symmetricWithDegrees(
-        Graph.purchaseEdges(Tables.orders(spark, dir), Tables.lineitem(spark, dir)))
-      s.count()
-      s
-    }
-    Graph.pageRank(symDeg)
+  def pageRankPurchases(spark: SparkSession, dir: String): DataFrame =
+    graft.graph.Graph.pageRank(purchaseSymDeg(spark, dir))
       .select(
         when(col("node") % 2 === 0, lit("customer")).otherwise(lit("part")).as("node_type"),
         expr("node div 2").as("node_key"),
         col("rank_fp"))
       .orderBy(col("rank_fp").desc, col("node_type"), col("node_key"))
       .limit(20)
-  }
 
   /** Min-label community detection (q149) — the second iterative graph
     * operator (q139's PageRank scores nodes; this one PARTITIONS them):
@@ -64,18 +70,8 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
     * node ids and the reduction is MIN — associative, deterministic,
     * replayed exactly by the oracle's unrolled CTEs (generated from
     * [[graft.graph.Graph.LpIters]]). */
-  def labelCommunities(spark: SparkSession, dir: String): DataFrame = {
-    import graft.graph.Graph
-    val symDeg = graft.SessionMemo.memo(spark, s"q139symdeg|$dir") {
-      val s = Graph.symmetricWithDegrees(
-        Graph.purchaseEdges(Tables.orders(spark, dir), Tables.lineitem(spark, dir)))
-      s.count()
-      s
-    }
-    val labels = graft.SessionMemo.memo(spark, s"q149labels|$dir") {
-      Graph.labelPropagation(symDeg)
-    }
-    labels
+  def labelCommunities(spark: SparkSession, dir: String): DataFrame =
+    purchaseLabels(spark, dir)
       .groupBy(col("lbl"))
       .agg(count(lit(1)).as("n_members"))
       .select(
@@ -84,7 +80,6 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
         col("n_members"))
       .orderBy(col("n_members").desc, col("community_type"), col("community_key"))
       .limit(20)
-  }
 
   /** Triangle census of the co-purchase graph (q177) — the standard
     * graph-health readout (triangle count + global clustering
@@ -120,10 +115,9 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
     * it again per call; one cache serves them all (the q235 multi-consumer
     * persist rule, r13 optimization). */
   private[graft] def coPurchaseIncidence(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.memo(spark, s"q154inc|$dir") {
+    graft.SessionMemo.frame(spark, s"q154inc|$dir") {
       Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Within-order co-purchase PAIR COUNTS (u < v, n_co = shared orders),
@@ -132,13 +126,12 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
     * memo both derive from this ONE pair join (edges = its key set), so
     * the suite pays the quadratic within-order fan-out once, not twice. */
   private[graft] def coPurchasePairCounts(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.memo(spark, s"q154paircounts|$dir") {
+    graft.SessionMemo.frame(spark, s"q154paircounts|$dir") {
       val li = coPurchaseIncidence(spark, dir)
       li.alias("a")
         .join(li.alias("b"), col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
         .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
         .agg(count(lit(1)).as("n_co"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Full-graph co-purchase degrees ((node, deg) over the edge memo, ONE
@@ -147,11 +140,10 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
     * stats), q190's histogram, and q195's round-1 peel; one cache serves
     * all three queries and every bench replay. */
   private[graft] def coPurchaseDegrees(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.memo(spark, s"q177deg|$dir") {
+    graft.SessionMemo.frame(spark, s"q177deg|$dir") {
       coPurchaseEdges(spark, dir)
         .select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def triangleCensus(spark: SparkSession, dir: String): DataFrame =
@@ -161,9 +153,7 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
       // The oriented frame has THREE consumers (both wedge sides + the
       // closure semi-join) — unmemoized, each re-pays the two degree
       // joins over the edge cache.
-      o => graft.SessionMemo.memo(spark, s"q177oriented|$dir") {
-        o.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      },
+      o => graft.SessionMemo.frame(spark, s"q177oriented|$dir")(o),
       // Degrees ride the cross-query memo (also q190/q195 — r13).
       _ => coPurchaseDegrees(spark, dir))
 
@@ -360,15 +350,12 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
     * q314 rounds shuffle only the node-sized register side; q205's
     * frontier side broadcasts, so the partitioning costs it nothing. */
   private[graft] def coPurchaseSym(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.memo(spark, s"q205sym|$dir") {
-      val s = coPurchaseEdges(spark, dir).select(explode(array(
+    graft.SessionMemo.frame(spark, s"q205sym|$dir") {
+      coPurchaseEdges(spark, dir).select(explode(array(
           struct(col("u").as("s"), col("v").as("t")),
           struct(col("v").as("s"), col("u").as("t")))).as("e"))
         .select(col("e.s").as("s"), col("e.t").as("t"))
         .repartition(col("t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      s.count()
-      s
     }
 
   def kHopReachability(spark: SparkSession, dir: String): DataFrame =
@@ -431,16 +418,8 @@ trait PipelineQueriesGraph { this: PipelineQueries.type =>
     * persisted symmetric edge memo) + node-sized aggregates; the 1-row
     * 2m scalar broadcasts back. */
   def modularityScore(spark: SparkSession, dir: String): DataFrame = {
-    import graft.graph.Graph
-    val symDeg = graft.SessionMemo.memo(spark, s"q139symdeg|$dir") {
-      val s = Graph.symmetricWithDegrees(
-        Graph.purchaseEdges(Tables.orders(spark, dir), Tables.lineitem(spark, dir)))
-      s.count()
-      s
-    }
-    val labels = graft.SessionMemo.memo(spark, s"q149labels|$dir") {
-      Graph.labelPropagation(symDeg)
-    }
+    val symDeg = purchaseSymDeg(spark, dir)
+    val labels = purchaseLabels(spark, dir)
     // r13 note: a memoized (node, lbl, outdeg) frame for the degree-sum
     // branch was measured and REVERTED — task CPU dropped 3.5× but wall
     // rose (2.2 s → 4.0 s min): the extra broadcast builds + cache

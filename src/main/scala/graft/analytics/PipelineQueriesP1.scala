@@ -65,53 +65,22 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
     * round-1 bench's two heaviest entries did exactly that). Both frames
     * are tiny (one row per doc / per verified set pair), so pinning them
     * for the process lifetime is free. */
-  // WeakHashMap on the session OBJECT: identity-keyed while the session
-  // lives (no hash collisions with stopped sessions), and the whole
-  // per-session entry — including its persisted frames' references —
-  // becomes collectable when the session does.
-  private[analytics] val nearDupTierCache =
-    new java.util.WeakHashMap[
-      SparkSession, scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]]()
   private[graft] def nearDupTiers(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val perSession = nearDupTierCache.synchronized {
-      var m = nearDupTierCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
-        nearDupTierCache.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
-      val (members, setPairs) = Dedup.tieredSetPairs(
-        Tables.documents(spark, dir), "doc_id", "text", threshold = 0.95)
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (members.persist(MEMORY_AND_DISK), setPairs.persist(MEMORY_AND_DISK))
-    })
+    lazy val tiers = Dedup.tieredSetPairs(
+      Tables.documents(spark, dir), "doc_id", "text", threshold = 0.95)
+    (graft.SessionMemo.frame(spark, s"q27members|$dir")(tiers._1),
+      graft.SessionMemo.frame(spark, s"q27setPairs|$dir")(tiers._2))
   }
 
   // Decontamination pairs (full corpus × benchmark at Jaccard ≥ 0.8) —
   // computed once per (session, dir) and persisted, shared by q62 and
   // q83: Jaccard is pairwise, so q83's survivors-only view is a semi-join
   // of the full-corpus pairs (one row per verified pair — tiny).
-  private[analytics] val crossPairCache =
-    new java.util.WeakHashMap[
-      SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]()
-  private[analytics] def crossPairs(spark: SparkSession, dir: String): DataFrame = {
-    val perSession = crossPairCache.synchronized {
-      var m = crossPairCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        crossPairCache.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
+  private[analytics] def crossPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.frame(spark, s"q62pairs|$dir") {
       val docs = Tables.documents(spark, dir)
-      Dedup
-        .crossNearDups(docs, docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", 0.8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+      Dedup.crossNearDups(docs, docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", 0.8)
+    }
 
   /** MinHash+LSH near-duplicates, exact-verified at Jaccard ≥ 0.95. The
     * oracle brute-forces all pairs — LSH params are chosen so candidate
@@ -362,7 +331,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
     * in CompactionSpec (DuckDB cannot see layout). */
   def compactionPublish(spark: SparkSession, dir: String): DataFrame = {
     graft.SessionMemo.memo(spark, s"q99|$dir") {
-      val work = java.nio.file.Files.createTempDirectory("graft_compact").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_compact").toString
       val table = s"$work/events_by_type"
       Tables.events(spark, dir)
         .repartition(32)
@@ -538,9 +507,8 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
     // memoized per (session, dir) (the q143hist discipline) so bench
     // replays read the cache instead of rebuilding the distinct-key
     // histogram; the unpersist moves to session close.
-    val hist = graft.SessionMemo.memo(spark, s"q103hist|$dir") {
+    val hist = graft.SessionMemo.frame(spark, s"q103hist|$dir") {
       li.groupBy(col("k")).agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     val n = hist.agg(sum(col("c"))).head().getLong(0)
     require(n > 0, "range boundaries need a non-empty key column")
@@ -1397,7 +1365,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "4")
       s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      val work = java.nio.file.Files.createTempDirectory("graft_rollup")
+      val work = graft.SessionMemo.workDir(spark, "graft_rollup")
       val rollup = s"$work/rollup"
       val staged = work.resolve("incoming")
       java.nio.file.Files.createDirectories(staged)
@@ -1405,8 +1373,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
       val ev = Tables.events(s, dir).select(col("event_id"), col("ts"),
         col("event_type"), col("value"))
       (0 until 3).foreach { i =>
-        val tmp = java.nio.file.Files.createTempDirectory("graft_rollup_feed")
-          .resolve("out").toString
+        val tmp = work.resolve(s"feed$i").toString
         ev.filter(col("event_id") % 3 === i).coalesce(1).write.parquet(tmp)
         val part = new java.io.File(tmp).listFiles()
           .filter(_.getName.endsWith(".parquet")).head.toPath
@@ -1823,21 +1790,9 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
   private[analytics] val OrdersDdl = "o_orderkey BIGINT, o_orderpriority STRING"
 
   // Bucketed twin tables per (session, dir) — written once into the
-  // session catalog/warehouse and reused (same WeakHashMap rationale as
-  // nearDupTierCache above).
-  private[analytics] val bucketedTableCache =
-    new java.util.WeakHashMap[
-      SparkSession, scala.collection.concurrent.TrieMap[String, (String, String)]]()
-  private[analytics] def bucketedTables(spark: SparkSession, dir: String): (String, String) = {
-    val perSession = bucketedTableCache.synchronized {
-      var m = bucketedTableCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-        bucketedTableCache.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
+  // session catalog/warehouse and reused.
+  private[analytics] def bucketedTables(spark: SparkSession, dir: String): (String, String) =
+    graft.SessionMemo.memo(spark, s"bucketed|$dir") {
       // The tag fingerprints dir + bucket count + column schemas (md5, not
       // a 32-bit hashCode): a leftover layout written under a DIFFERENT
       // bucket spec or schema version gets a different table name and is
@@ -1882,8 +1837,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
           Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")),
           ot, Seq("o_orderkey"), buckets = BucketCount))
       (lt, ot)
-    })
-  }
+    }
 
   /** Bucketed co-located fact⋈fact join as a query row: lineitem and
     * orders are both written bucketed+sorted on the order key, so the join
@@ -2287,7 +2241,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
     graft.SessionMemo.memo(spark, s"q100|$dir") {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "4")
-      val work = java.nio.file.Files.createTempDirectory("graft_ingest_dedup").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_ingest_dedup").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(s, dir)
       // Seed schema must match the survivors the stream appends (full
@@ -2723,14 +2677,13 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
     // Segment = "did event_type at high value" — the threshold keeps the
     // audiences from being the degenerate all-users set on a corpus where
     // every user touches every type.
-    val bm = graft.SessionMemo.memo(spark, s"q229bitmap|$dir") {
+    val bm = graft.SessionMemo.frame(spark, s"q229bitmap|$dir") {
       Tables.events(spark, dir)
         .filter(col("value") >= BitmapValueFloor)
         .select(col("event_type"), expr("user_id div 32").as("w"),
           expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 32 AS INT))").as("bit"))
         .groupBy(col("event_type"), col("w"))
         .agg(expr("bit_or(bit)").as("word"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     val card = bm.groupBy(col("event_type"))
       .agg(sum(expr("bit_count(word)")).as("n"))

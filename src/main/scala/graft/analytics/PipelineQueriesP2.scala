@@ -388,13 +388,10 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
     * joined back as a BROADCAST flag; per-lang coverage is a
     * metadata-sized rollup. */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val langTok = graft.SessionMemo.memo(spark, s"q129matrix|$dir") {
-      val m = Tables.documents(spark, dir)
+    val langTok = graft.SessionMemo.frame(spark, s"q129matrix|$dir") {
+      Tables.documents(spark, dir)
         .select(col("lang"), explode(split(col("text"), " ")).as("token"))
         .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      m.count() // materialize: both consumers below read the cached matrix
-      m
     }
     val vocab = langTok
       .groupBy(col("token")).agg(sum(col("n")).as("cnt"))
@@ -511,43 +508,39 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
   def lshBandingSweep(spark: SparkSession, dir: String): DataFrame = {
     val p = Dedup.MinHashParams()
     require(SweepConfigs.forall { case (b, r) => b * r == p.k })
-    val (cand, verified) = graft.SessionMemo.memo(spark, s"q131cand|$dir") {
-      val sets = Tables.documents(spark, dir)
+    val sets = graft.SessionMemo.frame(spark, s"q131sets|$dir") {
+      Tables.documents(spark, dir)
         .select(col("doc_id"),
           sort_array(array_distinct(TextAnalysis.tokens(col("text")))).as("toks"))
         .groupBy(col("toks")).agg(min(col("doc_id")).as("sid"))
         .withColumn("sig",
           graft.functions.MinHashFunctions
             .minhash_signature(col("toks"), p.bands, p.rowsPerBand, p.seed))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sets.count()
-      def candsOf(b: Int, r: Int): DataFrame = {
-        val banded = sets.select(col("sid"),
-          explode(expr(
-            s"""transform(sequence(0, ${b - 1}),
-               |  i -> named_struct('band_idx', i,
-               |    'band_key', xxhash64(cast(slice(sig, i * $r + 1, $r) AS STRING))))"""
-              .stripMargin)).as("bk"))
-          .select(col("sid"), col("bk.band_idx").as("band_idx"), col("bk.band_key").as("band_key"))
-        val l = banded.select(col("band_idx"), col("band_key"), col("sid").as("id_a"))
-        val rr = banded.select(col("band_idx"), col("band_key"), col("sid").as("id_b"))
-        l.join(rr, Seq("band_idx", "band_key"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b")).distinct()
-          .withColumn("bands", lit(b)).withColumn("rows_per_band", lit(r))
-      }
-      val c = SweepConfigs.map { case (b, r) => candsOf(b, r) }.reduce(_ union _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      val uniq = c.select(col("id_a"), col("id_b")).distinct()
-      val v = uniq
+    }
+    def candsOf(b: Int, r: Int): DataFrame = {
+      val banded = sets.select(col("sid"),
+        explode(expr(
+          s"""transform(sequence(0, ${b - 1}),
+             |  i -> named_struct('band_idx', i,
+             |    'band_key', xxhash64(cast(slice(sig, i * $r + 1, $r) AS STRING))))"""
+            .stripMargin)).as("bk"))
+        .select(col("sid"), col("bk.band_idx").as("band_idx"), col("bk.band_key").as("band_key"))
+      val l = banded.select(col("band_idx"), col("band_key"), col("sid").as("id_a"))
+      val rr = banded.select(col("band_idx"), col("band_key"), col("sid").as("id_b"))
+      l.join(rr, Seq("band_idx", "band_key"))
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b")).distinct()
+        .withColumn("bands", lit(b)).withColumn("rows_per_band", lit(r))
+    }
+    val cand = graft.SessionMemo.frame(spark, s"q131cand|$dir") {
+      SweepConfigs.map { case (b, r) => candsOf(b, r) }.reduce(_ union _)
+    }
+    val verified = graft.SessionMemo.frame(spark, s"q131verified|$dir") {
+      cand.select(col("id_a"), col("id_b")).distinct()
         .join(sets.select(col("sid").as("id_a"), col("toks").as("ta")), Seq("id_a"))
         .join(sets.select(col("sid").as("id_b"), col("toks").as("tb")), Seq("id_b"))
         .filter(Dedup.jaccardSorted(col("ta"), col("tb")) >= SweepJaccard)
         .select(col("id_a"), col("id_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      v.count()
-      (c, v)
     }
     cand
       .join(broadcast(verified.withColumn("hit", lit(1L))), Seq("id_a", "id_b"), "left_outer")
@@ -588,6 +581,15 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
       .limit(20)
   }
 
+  /** Distinct (user_id, day, event_type) incidence, one cache per
+    * (session, dir) — shared by q133 and q137. */
+  private def userDayTypes(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.frame(spark, s"q133incidence|$dir") {
+      Tables.events(spark, dir)
+        .select(col("user_id"), expr("CAST(ts AS DATE)").as("day"), col("event_type"))
+        .distinct()
+    }
+
   /** Event-type co-occurrence lift (q133) — association mining over
     * (user, day) baskets: for every unordered type pair, basket support
     * and lift (observed co-occurrence over the independence expectation),
@@ -607,14 +609,7 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
     * (blowup bounded by |types|² per basket, never corpus²); type
     * counts and the basket total are metadata-sized broadcasts. */
   def cooccurrenceLift(spark: SparkSession, dir: String): DataFrame = {
-    val bt = graft.SessionMemo.memo(spark, s"q133incidence|$dir") {
-      val m = Tables.events(spark, dir)
-        .select(col("user_id"), expr("CAST(ts AS DATE)").as("day"), col("event_type"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      m
-    }
+    val bt = userDayTypes(spark, dir)
     val nBaskets = bt.select(col("user_id"), col("day")).distinct()
       .agg(count(lit(1)).as("n_baskets"))
     val typeCounts = bt.groupBy(col("event_type")).agg(count(lit(1)).as("n_t"))
@@ -793,14 +788,7 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
     * window length, constant in corpus size; days beyond the observed
     * maximum are cut by a broadcast scalar. */
   def rollingActiveUsers(spark: SparkSession, dir: String): DataFrame = {
-    val incidence = graft.SessionMemo.memo(spark, s"q133incidence|$dir") {
-      val m = Tables.events(spark, dir)
-        .select(col("user_id"), expr("CAST(ts AS DATE)").as("day"), col("event_type"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      m
-    }.select(col("user_id"), col("day")).distinct()
+    val incidence = userDayTypes(spark, dir).select(col("user_id"), col("day")).distinct()
     val maxDay = incidence.agg(max(col("day")).as("max_day"))
     val dau = incidence.groupBy(col("day")).agg(countDistinct(col("user_id")).as("dau"))
     val wau = incidence
@@ -990,15 +978,12 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
     * idiom) — windows only ever see histogram rows, never lineitem rows;
     * the 3-row median/MAD frames broadcast back. */
   def madOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val hist = graft.SessionMemo.memo(spark, s"q143hist|$dir") {
-      val h = Tables.lineitem(spark, dir)
+    val hist = graft.SessionMemo.frame(spark, s"q143hist|$dir") {
+      Tables.lineitem(spark, dir)
         .select(col("l_returnflag").as("flag"),
           expr("CAST(FLOOR(l_extendedprice * 100) AS BIGINT) div 100").as("dollars"))
         .groupBy("flag", "dollars")
         .agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      h.count()
-      h
     }
     madOutliersOfHist(hist)
   }
@@ -1244,9 +1229,7 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
     // self-join sides); one cached build serves them all and every bench
     // replay (the q235sets discipline).
     docContainmentOf(Tables.documents(spark, dir),
-      memoRg = g => graft.SessionMemo.memo(spark, s"q147rg|$dir") {
-        g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      memoRg = g => graft.SessionMemo.frame(spark, s"q147rg|$dir")(g))
 
   private[graft] def docContainmentOf(
       docs: DataFrame, maxDf: Long = ContainMaxDf,
@@ -1785,7 +1768,7 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
 
   private[graft] def gdprPurgeOf(events: DataFrame): DataFrame = {
       val spark = events.sparkSession
-      val work = java.nio.file.Files.createTempDirectory("graft_purge").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_purge").toString
       val tombstones = botDetectionOf(events)
         .filter(col("is_bot")).select(col("user_id"))
       events
@@ -2274,9 +2257,7 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
     * round 2. Output: round-2 top-10 pairs + the applied merge. */
   def bpeMergeRound(spark: SparkSession, dir: String): DataFrame =
     bpeMergeRoundOf(Tables.documents(spark, dir),
-      v => graft.SessionMemo.memo(spark, s"q182vocab|$dir") {
-        v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      v => graft.SessionMemo.frame(spark, s"q182vocab|$dir")(v))
 
   /** `memoVocab` pins the vocab frame (vocab-sized, ~|distinct tokens|
     * rows) so the three consumers (round-1 pairs, merge application, and
@@ -2474,9 +2455,7 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
     * differ across engines, integer ppm probabilities do not. */
   def bigramFluency(spark: SparkSession, dir: String): DataFrame =
     bigramFluencyOf(Tables.documents(spark, dir),
-      b => graft.SessionMemo.memo(spark, s"q186bigrams|$dir") {
-        b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      b => graft.SessionMemo.frame(spark, s"q186bigrams|$dir")(b))
 
   /** `memoBigrams` pins the hashed bigram stream: its three consumers
     * (bigram counts, prefix counts, the scoring join) would otherwise

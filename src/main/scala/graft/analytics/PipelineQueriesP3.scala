@@ -39,12 +39,11 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     // every iteration (and every bench replay) re-read + re-filtered the
     // parquet corpus for one matvec; the iteration itself must stay
     // sequential (each round's v feeds the next expression).
-    val e = graft.SessionMemo.memo(spark, s"q188e|$dir") {
+    val e = graft.SessionMemo.frame(spark, s"q188e|$dir") {
       graft.Tables.fan( // r13: per-iteration matvec maps over this cache
-          Tables.embeddings(spark, dir)
-            .filter(col("embedding").isNotNull && size(col("embedding")) >= Dim),
-          col("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Tables.embeddings(spark, dir)
+          .filter(col("embedding").isNotNull && size(col("embedding")) >= Dim),
+        col("vec_id"))
     }
     var v = Array.tabulate(Dim)(j => if (j == 0) PowerScale else 0L)
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Long)]
@@ -161,16 +160,8 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     * at corpus scale where the sketch is the product. */
   def joinSizeEstimate(spark: SparkSession, dir: String): DataFrame =
     joinSizeEstimateOf(Tables.lineitem(spark, dir).select(col("l_partkey").as("k")),
-      // r14 (r13 advice): memoize the persisted count frame per
-      // (session, dir) — a fresh per-call persist with no unpersist
-      // leaked one cached frame per invocation/bench replay. Eager
-      // count(): its two consumers (sketch cells, exact branch) are
-      // concurrent AQE stages — the GlobalRank cache-race rule.
-      c => graft.SessionMemo.memo(spark, s"q191counts|$dir") {
-        val p = c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      })
+      // Two consumers: the sketch cells and the exact branch.
+      c => graft.SessionMemo.frame(spark, s"q191counts|$dir")(c))
 
   private[graft] def joinSizeEstimateOf(keys: DataFrame,
       memoCounts: DataFrame => DataFrame = identity): DataFrame = {
@@ -256,10 +247,9 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     * is paid once instead of twice. */
   def quantileAccuracy(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cents = graft.SessionMemo.memo(spark, s"q193cents|$dir") {
+    val cents = graft.SessionMemo.frame(spark, s"q193cents|$dir") {
       Tables.lineitem(spark, dir)
         .select(expr("CAST(l_extendedprice * 100 AS DECIMAL(14,0))").cast("long").as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     val qs = (1 to 9).map(_ * 0.1)
     val accuracy = (10000L / QuantileEpsBp) * 100L // eps = QuantileEpsBp/1e4 → acc 1e4/..·..
@@ -534,7 +524,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
       // ingest session only (the frames are KB-sized; nothing AQE would
       // fix), ~2× on the four-batch run.
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      val work = java.nio.file.Files.createTempDirectory("graft_fuzzy_ingest").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_fuzzy_ingest").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") % 7 =!= 0)
@@ -976,15 +966,8 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
   def histogramAccuracy(spark: SparkSession, dir: String): DataFrame =
     histogramAccuracyOf(Tables.lineitem(spark, dir)
       .select(expr("CAST(l_extendedprice * 100 AS DECIMAL(14,0))").cast("long").as("v")),
-      // r14 (r13 advice): memoize the persisted value frame per
-      // (session, dir) instead of leaking one cache per call; eager
-      // count() — FOUR concurrent consumers (stats, histogram, bin
-      // counts, exact branch) otherwise race on cache population.
-      vs => graft.SessionMemo.memo(spark, s"q213values|$dir") {
-        val p = vs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      })
+      // Four consumers: stats, histogram, bin counts, exact branch.
+      vs => graft.SessionMemo.frame(spark, s"q213values|$dir")(vs))
 
   private[graft] def histogramAccuracyOf(values0: DataFrame,
       memoValues: DataFrame => DataFrame = identity): DataFrame = {
@@ -1141,9 +1124,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     * unbounded windows over it; the report is 2·K rows. */
   def tokenKeyness(spark: SparkSession, dir: String): DataFrame =
     tokenKeynessOf(Tables.documents(spark, dir),
-      c => graft.SessionMemo.memo(spark, s"q217counts|$dir") {
-        c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      c => graft.SessionMemo.frame(spark, s"q217counts|$dir")(c))
 
   /** `memoCounts` pins the vocab-sized keyness frame — its two direction
     * consumers would otherwise re-tokenize the corpus twice (q182
@@ -1213,23 +1194,10 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     prefixFilterJoinOf(Tables.documents(spark, dir),
       // The sets/members frames feed MANY lineage branches (prefix sides,
       // verify sides, clique expansion) — unpersisted, each branch re-runs
-      // the grouping shuffle; persisted once, they serve them all. Eager
-      // count() (r14): the branches are concurrent AQE stages — the
-      // GlobalRank cache-race rule.
-      sm => graft.SessionMemo.memo(spark, s"q235sets|$dir") {
-        val a = sm._1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val b = sm._2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        a.count(); b.count()
-        (a, b)
-      },
-      // r14 (r13 advice): the prefix-postings persist was per-call with
-      // no unpersist — one leaked cache per invocation/replay; memoized
-      // + eagerly materialized like the sets.
-      p => graft.SessionMemo.memo(spark, s"q235pfx|$dir") {
-        val x = p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        x.count()
-        x
-      })
+      // the grouping shuffle; persisted once, they serve them all.
+      sm => (graft.SessionMemo.frame(spark, s"q235sets|$dir")(sm._1),
+        graft.SessionMemo.frame(spark, s"q235members|$dir")(sm._2)),
+      p => graft.SessionMemo.frame(spark, s"q235pfx|$dir")(p))
 
   private[graft] def prefixFilterJoinOf(docs: DataFrame,
       memoSets: ((DataFrame, DataFrame)) => (DataFrame, DataFrame) = identity(_),
@@ -1924,9 +1892,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
   def onlineSemDedup(spark: SparkSession, dir: String): DataFrame =
     graft.similarity.SemDedup.onlineAdmission(spark,
       Tables.embeddings(spark, dir), "vec_id", "embedding",
-      memoFrame = (key, mk) => graft.SessionMemo.memo(spark, s"q240$key|$dir") {
-        mk().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      memoFrame = (key, mk) => graft.SessionMemo.frame(spark, s"q240$key|$dir")(mk()))
 
   /** q252 labeler thresholds, shared with the oracle: 3-class cuts on
     * lexical diversity (distinct/total tokens, bp) and mean word length
@@ -2070,7 +2036,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     graft.SessionMemo.memo(spark, s"q254|$dir") {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "4")
-      val work = java.nio.file.Files.createTempDirectory("graft_admit_store").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_admit_store").toString
       graft.similarity.SemDedup.committedAdmission(
         s, Tables.embeddings(s, dir), "vec_id", "embedding", s"$work/admitted")
       spark.read.parquet(s"$work/admitted")
@@ -2112,9 +2078,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     * learner's replace chain, and the oracle's unrolled k-round CTEs. */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame =
     bpeEncodeOf(Tables.documents(spark, dir), BpeEncodeMerges,
-      v => graft.SessionMemo.memo(spark, s"q255vocab|$dir") {
-        v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      v => graft.SessionMemo.frame(spark, s"q255vocab|$dir")(v))
 
   private[graft] def bpeEncodeOf(docs: DataFrame, k: Int,
       memoVocab: DataFrame => DataFrame = identity): DataFrame = {
@@ -2195,9 +2159,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     * at a 10¹²-gram corpus square past BIGINT). */
   def dsirSelection(spark: SparkSession, dir: String): DataFrame =
     dsirSelectionOf(Tables.documents(spark, dir),
-      b => graft.SessionMemo.memo(spark, s"q257bg|$dir") {
-        b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      b => graft.SessionMemo.frame(spark, s"q257bg|$dir")(b))
 
   private[graft] def dsirSelectionOf(docs: DataFrame,
       memoBg: DataFrame => DataFrame = identity): DataFrame = {
@@ -2626,7 +2588,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     * hash. */
   def scoreStoreIncremental(spark: SparkSession, dir: String): DataFrame =
     graft.SessionMemo.memo(spark, s"q264|$dir") {
-      val work = java.nio.file.Files.createTempDirectory("graft_score_store").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_score_store").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"),

@@ -63,7 +63,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
   def curationDagAudit(spark: SparkSession, dir: String): DataFrame =
     graft.SessionMemo.memo(spark, s"q317|$dir") {
       import graft.dedup.IncrementalDedup
-      val work = java.nio.file.Files.createTempDirectory("graft_dag_store").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_dag_store").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"),
@@ -910,7 +910,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     * chunk boundaries shift by one whole segment and stay comparable. */
   def boilerStoreIncremental(spark: SparkSession, dir: String): DataFrame =
     graft.SessionMemo.memo(spark, s"q277|$dir") {
-      val work = java.nio.file.Files.createTempDirectory("graft_boiler_store").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_boiler_store").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"),
@@ -1278,7 +1278,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     graft.SessionMemo.memo(spark, s"q282|$dir") {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "4")
-      val work = java.nio.file.Files.createTempDirectory("graft_boiler_gate").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_boiler_gate").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(s, dir)
       val banner = "promo sale banner click here "
@@ -1326,6 +1326,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         }
         .start()
       graft.StreamLog.await(t0, q)
+      boilerKeys.unpersist(blocking = false)
       spark.read.parquet(decisions)
         .select(col("doc_id"), col("source"), col("n_segments"), col("n_boiler"),
           col("boiler_bp"), col("admitted"))
@@ -1360,15 +1361,8 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     * windowed unpartitioned or collected. */
   def bordaFusion(spark: SparkSession, dir: String): DataFrame =
     bordaFusionOf(Tables.documents(spark, dir),
-      // r14 (r13 advice): memoize the persisted signal frame per
-      // (session, dir) — the per-call persist leaked one cached frame
-      // per invocation/replay. Eager count(): the first GlobalRank's
-      // sampling pass and exchange are concurrent consumers.
-      s => graft.SessionMemo.memo(spark, s"q283sigs|$dir") {
-        val p = s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      })
+      // Consumers: the first GlobalRank's sampling pass and its exchange.
+      s => graft.SessionMemo.frame(spark, s"q283sigs|$dir")(s))
 
   private[graft] def bordaFusionOf(docs: DataFrame,
       memoSigs: DataFrame => DataFrame = identity): DataFrame = {
@@ -1442,20 +1436,8 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     * slim (key, longs) rows ever shuffle; the card is E rows. */
   def epochSchedule(spark: SparkSession, dir: String): DataFrame =
     epochScheduleOf(Tables.documents(spark, dir),
-      // r14 (r13 advice): both per-call persists leaked one cached frame
-      // each per invocation/replay — memoized per (session, dir), eagerly
-      // materialized (concurrent consumers, the GlobalRank cache-race
-      // rule).
-      s => graft.SessionMemo.memo(spark, s"q284shards|$dir") {
-        val p = s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      },
-      pe => graft.SessionMemo.memo(spark, s"q284perEpoch|$dir") {
-        val p = pe.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      })
+      s => graft.SessionMemo.frame(spark, s"q284shards|$dir")(s),
+      pe => graft.SessionMemo.frame(spark, s"q284perEpoch|$dir")(pe))
 
   private[graft] def epochScheduleOf(docs: => DataFrame,
       memoShards: (=> DataFrame) => DataFrame = d => d,
@@ -1744,7 +1726,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     graft.SessionMemo.memo(spark, s"q293|$dir") {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "4")
-      val work = java.nio.file.Files.createTempDirectory("graft_stream_trender").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_stream_trender").toString
       val staged = s"$work/incoming"
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"))
@@ -2280,21 +2262,12 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     // dir) — it has five consumers per invocation (the median rank
     // explode, both variants' packing pass, both variants' imbalance
     // explode), each of which re-read + re-floored the parquet corpus.
-    val f = graft.SessionMemo.memo(spark, s"q297f|$dir") {
+    val f = graft.SessionMemo.frame(spark, s"q297f|$dir") {
       // Tables.fan: the cache feeds map-heavy consumers (packing, Hamming
       // stream side) — a 1-partition cache would keep them single-task.
-      val df = graft.Tables.fan(embs, col("vec_id")).select(col("vec_id"),
+      graft.Tables.fan(embs, col("vec_id")).select(col("vec_id"),
         expr(s"transform(slice(embedding, 1, $d), " +
           "x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))").as("f"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // EAGER materialization (r14, the GlobalRank/q139symdeg rule): the
-      // consumers are concurrent AQE stages, and a lazily-persisted frame
-      // makes their tasks race on the un-populated cache blocks (compute
-      // duplicated, every other task blocked on the BlockInfoManager
-      // lock — the r13 driver's 8-core run measured 126 s of task run at
-      // 43% CPU on this query's 2 000-row frames).
-      df.count()
-      df
     }
     // The 64 exact medians are a deterministic driver value — memoized so
     // replays skip the corpus-wide GlobalRank (same r13 rationale).
@@ -2313,13 +2286,10 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     // (session, dir) — four consumers per invocation (each variant's hit
     // semi-join and query count) and every bench replay re-paid the
     // full query×corpus cosine scan.
-    val truth = graft.SessionMemo.memo(spark, s"q297truth|$dir") {
-      val t = Ann.bruteForceTopK(embs.filter(col("vec_id") % 50 === 0), embs,
+    val truth = graft.SessionMemo.frame(spark, s"q297truth|$dir") {
+      Ann.bruteForceTopK(embs.filter(col("vec_id") % 50 === 0), embs,
           "vec_id", "embedding", k = 10)
         .select(col("query_id"), col("neighbor_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count() // eager — two concurrent consumers (hit semi-join, n_queries)
-      t
     }
     // r14 optimization (guide §2.3/§2.4 — do the work once): the two
     // variants ("median" threshold vs "zero" threshold) were two
@@ -2923,7 +2893,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     graft.SessionMemo.memo(spark, s"q307|$dir") {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "4")
-      val work = java.nio.file.Files.createTempDirectory("graft_ppl_gate").toString
+      val work = graft.SessionMemo.workDir(spark, "graft_ppl_gate").toString
       val docs = Tables.documents(s, dir)
       val (model, ctx) = pplModel(docs)
       // Incoming: 12-token heads of mod-6 docs (≥13 tokens), fresh ids —

@@ -50,12 +50,8 @@ trait PipelineQueriesRetrieval { this: PipelineQueries.type =>
     // assembly via q127), each of which re-ran the corpus scan + pruned
     // postings plan (the hyperBallMemo discipline applied to the lexical
     // rankers: one expensive build, cheap folds).
-    graft.SessionMemo.memo(spark, s"q110top|$dir") {
-      val t = tfidfTopkBuild(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count()
-      t
-    }.orderBy(col("score").desc, col("doc_id"))
+    graft.SessionMemo.frame(spark, s"q110top|$dir")(tfidfTopkBuild(spark, dir))
+      .orderBy(col("score").desc, col("doc_id"))
 
   private[graft] def tfidfTopkBuild(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -181,12 +177,8 @@ trait PipelineQueriesRetrieval { this: PipelineQueries.type =>
   def bm25Topk(spark: SparkSession, dir: String): DataFrame =
     // r13 optimization: memoized like [[tfidfTopk]] — the same three
     // registered consumers (this card, q127, q203 via q127).
-    graft.SessionMemo.memo(spark, s"q126top|$dir") {
-      val t = bm25TopkBuild(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count()
-      t
-    }.orderBy(col("score").desc, col("doc_id"))
+    graft.SessionMemo.frame(spark, s"q126top|$dir")(bm25TopkBuild(spark, dir))
+      .orderBy(col("score").desc, col("doc_id"))
 
   private[graft] def bm25TopkBuild(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -230,12 +222,8 @@ trait PipelineQueriesRetrieval { this: PipelineQueries.type =>
     // call; the rankers themselves already ride their own memos, so this
     // memo only collapses the 10-row window/join arithmetic, but it keeps
     // q203's replays corpus-free end to end.
-    graft.SessionMemo.memo(spark, s"q127fused|$dir") {
-      val f = rrfFusionBuild(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      f.count()
-      f
-    }.orderBy(col("rrf_score").desc, col("doc_id"))
+    graft.SessionMemo.frame(spark, s"q127fused|$dir")(rrfFusionBuild(spark, dir))
+      .orderBy(col("rrf_score").desc, col("doc_id"))
 
   private[graft] def rrfFusionBuild(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -406,14 +394,13 @@ trait PipelineQueriesRetrieval { this: PipelineQueries.type =>
     * corpus explode+distinct passes; one persisted scan serves them all,
     * and q234 shares it instead of rebuilding its own copy. */
   private[graft] def docTokenSets(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.memo(spark, s"docTokens|$dir") {
+    graft.SessionMemo.frame(spark, s"docTokens|$dir") {
       // Tables.fan (r13): the tokenize + explode + partial-distinct runs
       // map-side on a one-row-group scan — single-threaded unwidened.
       Tables.fan(Tables.documents(spark, dir).select(col("doc_id"), col("text")),
           col("doc_id"))
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Trigram-index substring search (q243) — how a code-search engine

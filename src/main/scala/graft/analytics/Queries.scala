@@ -377,7 +377,7 @@ object Queries {
         if (src.schema("ts").dataType == org.apache.spark.sql.types.LongType)
           lit(4102444800000000000L)
         else lit(java.time.LocalDateTime.of(2100, 1, 1, 0, 0))
-      val tmp = Files.createTempDirectory("graft_tws_sentinel").toString
+      val tmp = graft.SessionMemo.workDir(s, "graft_tws_sentinel").toString
       src.limit(1)
         .withColumn("user_id", lit(-1L))
         .withColumn("ts", sentinelTs)

@@ -50,8 +50,8 @@ object Graph {
       .distinct()
 
   /** Degree-annotated symmetric edge list (src, dst, outdeg), repartitioned
-    * by `src` and persisted so every iteration's join reuses one layout.
-    * Caller owns the unpersist (or session lifetime via SessionMemo). */
+    * by `src`. Unpersisted: the caller persists it (SessionMemo.frame) so
+    * every iteration's join reuses one layout. */
   def symmetricWithDegrees(edges: DataFrame): DataFrame = {
     val sym = edges.select(col("u").as("src"), col("v").as("dst"))
       .union(edges.select(col("v").as("src"), col("u").as("dst")))
@@ -66,7 +66,6 @@ object Graph {
       // PageRank/label round re-sorted the full 2·|E| cached frame —
       // 3 sorts per query per rep at sf0.1, the dominant replay cost.
       .sortWithinPartitions(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Unnormalized PageRank, `iters` fixed-point iterations over the

@@ -91,21 +91,15 @@ object IvfPqIndex {
       .digest(spec.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
   }
 
-  // Loaded layouts per session (same WeakHashMap rationale as
-  // PipelineQueries.bucketedTableCache): the sidecar read and the
-  // existence probe are paid once per (session, tag), not per search.
-  private val committedCache =
-    new java.util.WeakHashMap[
-      SparkSession, scala.collection.concurrent.TrieMap[String, Committed]]()
+  // Loaded layouts are memoized per (session, tag) under this key prefix:
+  // the sidecar read and the existence probe are paid once, not per search.
+  private val MemoPrefix = "ivfpq|"
 
   /** Test hook: forget this session's loaded layouts so the next ensure()
     * exercises the cross-JVM re-register path (existence probe + sidecar
     * load) instead of the in-memory memo. */
   private[graft] def dropCachedLayouts(spark: SparkSession): Unit =
-    committedCache.synchronized {
-      val m = committedCache.get(spark)
-      if (m != null) m.clear()
-    }
+    graft.SessionMemo.forget(spark)(_.startsWith(MemoPrefix))
 
   /** The query-side routing + residual projection shared by build and
     * search: queries/vectors route to cells by cosine (as in
@@ -121,16 +115,8 @@ object IvfPqIndex {
     * and return it with the sidecar state loaded. */
   def ensure(spark: SparkSession, corpus: DataFrame, idCol: String, vecCol: String,
       p: Params = Params()): Committed = {
-    val perSession = committedCache.synchronized {
-      var m = committedCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, Committed]
-        committedCache.put(spark, m)
-      }
-      m
-    }
     val tag = layoutTag(spark, corpus, p)
-    perSession.getOrElseUpdate(tag, {
+    graft.SessionMemo.memo(spark, MemoPrefix + tag) {
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"), s"graft_ivfpq_$tag")
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -146,7 +132,7 @@ object IvfPqIndex {
         graft.LayoutLog.record(s"ivfpq_$tag", (System.nanoTime() - t0) / 1e9)
       }
       load(spark, loc.toString, p)
-    })
+    }
   }
 
   /** Build and commit the layout: identical arithmetic to
@@ -367,13 +353,9 @@ object IvfPqIndex {
     doomed.foreach(fs.delete(_, true))
     // Drop any in-memory memo of deleted layouts so a later ensure()
     // rebuilds instead of serving a dangling location.
-    committedCache.synchronized {
-      val m = committedCache.get(spark)
-      if (m != null) m.filterInPlace { case (_, c) =>
-        !doomed.exists(d => c.location == d.toString)
-      }
-    }
-    doomed.map(_.getName).toSeq
+    val names = doomed.map(_.getName).toSeq
+    graft.SessionMemo.forget(spark)(names.map(MemoPrefix + _.stripPrefix("graft_ivfpq_")).toSet)
+    names
   }
 
   /** Load the sidecar (one-row collect) and wrap the layout. */

@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query optimization probe (round-13 measurement harness, guide §1):
-  * runs the named queries under the EXACT Bench session configuration,
-  * times [[reps]] repetitions with the same `.count()` action the bench
-  * uses, and (optionally) writes `.explain("formatted")` to a plans dir —
-  * the `plans/r13/<query>_{before,after}.txt` deliverable.
+  * runs the named queries on an [[graft.Engine.session]], times [[reps]]
+  * repetitions of a full-output `noop` write (every output column is
+  * computed, as `Verify` writes them), and (optionally) writes
+  * `.explain("formatted")` to a plans dir — the
+  * `plans/r13/<query>_{before,after}.txt` deliverable.
   *
   * Per run it also prints the per-query stage breakdown (stage id, name,
   * wall ms, task count) from a stage listener, so "where does the time
@@ -14,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   * alone.
   *
   * Usage: runMain graft.tools.QProbe <sfDir> <plansDirOrNONE> <suffix> q1 q2 ...
-  * (suffix e.g. "before"/"after"; NONE skips plan files.)
+  * (suffix e.g. "before"/"after"; NONE skips plan files.) Cores:
+  * `SPARK_GRAFT_CPUS`, default the host's.
   */
 object QProbe {
   def main(args: Array[String]): Unit = {
@@ -22,19 +22,9 @@ object QProbe {
     val plansDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_THRESHOLD", "128"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = graft.Engine.session(cpus, "graft-qprobe")
     try { graft.similarity.IvfPqIndex.vacuum(spark, Set.empty); () }
     catch { case scala.util.control.NonFatal(_) => () }
     // Same warmup as Bench: every table touched once. NonFatal only, and
@@ -90,7 +80,7 @@ object QProbe {
       val times = (1 to reps).map { rep =>
         stages.clear()
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val s = (System.nanoTime() - t0) / 1e9
         if (rep == 1 || rep == reps) {
           val tag = if (rep == 1) "cold" else "rep" + rep
