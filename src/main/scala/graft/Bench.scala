@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftListenerBridge
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times every registered query at the given scale
@@ -88,27 +89,11 @@ object Bench {
     * leaky: a replay of a 187 MB-shuffle query (q314) delivered ~3.7 MB
     * of straggler events inside the NEXT query's window, perturbing the
     * byte-identity channel the cross-round plan-stability argument rests
-    * on. `listenerBus.waitUntilEmpty` is private[spark] — public in
-    * bytecode, so plain reflection reaches it; any failure degrades to a
-    * bounded sleep rather than a broken run. */
+    * on. A bus still busy after 5 s leaves the deltas approximate rather
+    * than breaking the run. */
   private def drainListeners(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val m = bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" &&
-          m.getParameterCount == 1 &&
-          m.getParameterTypes()(0) == java.lang.Long.TYPE)
-      m match {
-        case Some(w) => w.invoke(bus, java.lang.Long.valueOf(5000L)); ()
-        case None =>
-          bus.getClass.getMethods
-            .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0) match {
-            case Some(w) => w.invoke(bus); ()
-            case None => Thread.sleep(200)
-          }
-      }
-    } catch { case _: Throwable => Thread.sleep(200) }
+    try GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 5000L)
+    catch { case _: java.util.concurrent.TimeoutException => () }
 
   /** Cumulative JVM GC milliseconds across all collectors — per-query
     * deltas let a GC-pressure window be told apart from host contention

@@ -133,14 +133,10 @@ object Tables {
     val path = s"$d/events.parquet"
     val schema = s.read.parquet(path).schema
     // The file stream source requires a directory; the harness table is a
-    // single file. Stage a symlink dir (idempotent, no data copy).
-    import java.nio.file.{Files, Paths}
-    val linkDir = Paths.get(
-      sys.props("java.io.tmpdir"),
-      "graft_stream_src_" + Integer.toHexString(d.hashCode))
-    Files.createDirectories(linkDir)
-    val link = linkDir.resolve("events.parquet")
-    if (!Files.exists(link)) Files.createSymbolicLink(link, Paths.get(path))
+    // single file. Stage a symlink dir (no data copy).
+    val linkDir = SessionMemo.workDir(s, "graft_stream_src")
+    java.nio.file.Files.createSymbolicLink(
+      linkDir.resolve("events.parquet"), java.nio.file.Paths.get(path).toAbsolutePath)
     normalizeTs(s.readStream.schema(schema).parquet(linkDir.toString))
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")

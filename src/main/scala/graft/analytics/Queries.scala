@@ -355,36 +355,28 @@ object Queries {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import java.nio.file.{Files, Paths}
-    // The stage dir holds a WRITTEN sentinel file, so its name must key on
-    // the source ts encoding too — a harness drop that changes the column
-    // type (nanos-long → micros-NTZ) must stage fresh, not serve a stale
-    // sentinel with the old physical type.
-    val tsTag = Tables.load(s, dir, "events").schema("ts").dataType
-      .typeName.filter(_.isLetterOrDigit)
-    val stage = Paths.get(sys.props("java.io.tmpdir"),
-      "graft_tws_src_" + Integer.toHexString(dir.hashCode) + "_" + tsTag)
-    Files.createDirectories(stage)
-    val link = stage.resolve("events.parquet")
-    if (!Files.exists(link))
-      Files.createSymbolicLink(link, Paths.get(s"$dir/events.parquet"))
-    val sentinelFile = stage.resolve("sentinel.parquet")
-    if (!Files.exists(sentinelFile)) {
-      // 2100-01-01 UTC, written in the SAME ts encoding as the source
-      // files (epoch-nanos long for legacy drops, TIMESTAMP_NTZ for
-      // current micros drops) so the staged dir stays schema-uniform.
+    // Staged once per parent session: the link, plus a sentinel written in
+    // the SAME ts encoding as the source files (epoch-nanos long for
+    // legacy drops, TIMESTAMP_NTZ for current micros drops) so the staged
+    // dir stays schema-uniform.
+    val stage = graft.SessionMemo.memo(spark, s"twsStage|$dir") {
+      val stage = graft.SessionMemo.workDir(spark, "graft_tws_src")
+      Files.createSymbolicLink(stage.resolve("events.parquet"),
+        Paths.get(s"$dir/events.parquet").toAbsolutePath)
       val src = Tables.load(s, dir, "events")
       val sentinelTs =
         if (src.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-          lit(4102444800000000000L)
+          lit(4102444800000000000L) // 2100-01-01 UTC
         else lit(java.time.LocalDateTime.of(2100, 1, 1, 0, 0))
-      val tmp = graft.SessionMemo.workDir(s, "graft_tws_sentinel").toString
+      val tmp = graft.SessionMemo.workDir(spark, "graft_tws_sentinel").toString
       src.limit(1)
         .withColumn("user_id", lit(-1L))
         .withColumn("ts", sentinelTs)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(f => f.getName.endsWith(".parquet")).head
-      Files.copy(part.toPath, sentinelFile)
+      Files.copy(part.toPath, stage.resolve("sentinel.parquet"))
+      stage
     }
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     val ev = Tables.normalizeTs(

@@ -428,8 +428,6 @@ object Dedup {
       converged = changed.value == 0L
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] iter $iter converged=$converged t=${System.nanoTime() / 1000000}")
     }
     lastLoopStats = (iter, converged)
     if (!converged) {

@@ -1,11 +1,16 @@
 /* Lives in Spark's package on purpose: LiveListenerBus.waitUntilEmpty is
- * private[spark], but spill-metric assertions need a deterministic flush of
- * TaskEnd events before reading a tally (task metrics arrive on the bus
- * asynchronously after an action returns). Minimal bridge, test-support
- * only — same rationale as GraftColumnBridge. */
+ * private[spark], but task metrics arrive on the bus asynchronously after
+ * an action returns, so a tally read at a query boundary needs a
+ * deterministic flush first. Used by Bench's per-query deltas, SpillCheck
+ * and SpillSpec; same rationale as GraftColumnBridge. */
 package org.apache.spark
 
 object GraftListenerBridge {
   def waitUntilListenerBusEmpty(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Throws `java.util.concurrent.TimeoutException` if the bus has not
+    * drained within `timeoutMillis`. */
+  def waitUntilListenerBusEmpty(sc: SparkContext, timeoutMillis: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMillis)
 }

@@ -407,6 +407,50 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
+  test("GlobalRank edge inputs: an all-NULL value shard, an empty frame, more shards than rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.GlobalRank
+    val byK = Window.orderBy(col("k"))
+    val total = Window.orderBy(col("k"), col("id"))
+    def strictMax(df: DataFrame) =
+      df.withColumn("out", max(col("v")).over(byK.rangeBetween(Window.unboundedPreceding, -1)))
+    def exclusiveSum(c: String) =
+      coalesce(sum(col(c)).over(total.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+    // (name, sharded, serial); `k` has 4-way ties, (k, id) is total.
+    val ops: Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)] = Seq(
+      ("rowNumber", GlobalRank.rowNumber(_, Seq(col("k"), col("id")), "out", shards = 8),
+        _.withColumn("out", row_number().over(total).cast("long"))),
+      ("prefixMax strict", GlobalRank.prefixMax(_, col("k"), col("v"), "out", shards = 8),
+        strictMax),
+      ("prefixMax inclusive",
+        GlobalRank.prefixMax(_, col("k"), col("v"), "out", inclusiveOut = "incl", shards = 8),
+        df => strictMax(df)
+          .withColumn("incl", max(col("v")).over(byK.rangeBetween(Window.unboundedPreceding, 0)))),
+      ("prefixSums", GlobalRank.prefixSums(_, Seq(col("k"), col("id")),
+        Seq(col("v") -> "out", col("id") -> "out2"), shards = 8),
+        _.withColumn("out", exclusiveSum("v")).withColumn("out2", exclusiveSum("id"))))
+    // The NULL run covers half of 400 rows, so at least one of the 8
+    // range shards holds only NULL values.
+    val inputs: Seq[(String, Long, String)] = Seq(
+      ("an all-NULL value shard", 400L, "CASE WHEN id BETWEEN 100 AND 299 THEN NULL ELSE id % 13 END"),
+      ("an empty frame", 0L, "id % 13"),
+      ("more shards than rows", 3L, "id % 13"))
+    for ((input, rows, v) <- inputs; (op, sharded, serial) <- ops) {
+      // The op name keeps every frame's plan distinct, so no call finds
+      // its sharding already cached by an earlier one.
+      val df = spark.range(0L, rows).selectExpr("id", "id DIV 4 AS k", s"$v AS v", s"'$op' AS op")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = sharded(df)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.size == 1, s"$op on $input: building added persisted RDDs $added")
+      val expected = serial(df)
+      assert(out.schema == expected.schema, s"$op on $input")
+      assert(out.count() == rows, s"$op on $input")
+      assert(out.exceptAll(expected).isEmpty && expected.exceptAll(out).isEmpty, s"$op on $input")
+    }
+  }
+
   test("partitioned layout prunes directories at planning time") {
     TestSpark.withTempDir("graft_part") { dir =>
       val events = Tables.events(spark, TestSpark.SfDir)

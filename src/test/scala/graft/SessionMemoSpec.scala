@@ -70,4 +70,24 @@ class SessionMemoSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     assert(compactDirs == before, s"new dirs: ${compactDirs -- before}")
   }
+
+  test("the event stream and the tws query stage nothing in the JVM temp dir") {
+    import scala.jdk.CollectionConverters._
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val hex = Integer.toHexString(TestSpark.SfDir.hashCode)
+    def staged: Seq[java.nio.file.Path] = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n == s"graft_stream_src_$hex" || n.startsWith(s"graft_tws_src_${hex}_")
+      }.toList
+      finally ls.close()
+    }
+    staged.foreach(p => org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
+    // A fresh session misses the tws memo, so both stagings run.
+    val s = spark.newSession()
+    assert(Tables.eventsStream(s, TestSpark.SfDir).isStreaming)
+    assert(graft.analytics.Queries.streamSessions(s, TestSpark.SfDir).count() > 0)
+    assert(staged.isEmpty, s"staged in the JVM temp dir: ${staged.mkString(", ")}")
+  }
 }

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * not grow its own temp dirs, session-keyed caches, or memo bodies that
   * persist a frame by hand and keep it (a scoped persist that the body
   * releases again is fine; a frame that outlives the body is
-  * `SessionMemo.frame`'s job). */
+  * `SessionMemo.frame`'s job). Also keeps one parser of the session's
+  * shuffle width. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -57,5 +58,15 @@ class SourceGuardSpec extends AnyFunSuite {
       if b.contains(".persist(") && !b.contains(".unpersist(")
     } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}"
     assert(offenders.isEmpty, s"use SessionMemo.frame at: ${offenders.mkString(", ")}")
+  }
+
+  test("java.io.tmpdir appears in no main source") {
+    val found = filesMatching("""java\.io\.tmpdir""")
+    assert(found.isEmpty, s"use SessionMemo.workDir in: $found")
+  }
+
+  test("spark.sql.shuffle.partitions is parsed only by Tables.shuffleWidth in Engine") {
+    val found = filesMatching("""conf\.get\("spark\.sql\.shuffle\.partitions"""")
+    assert(found.subsetOf(Set("Engine.scala")), s"use Tables.shuffleWidth in: ${found - "Engine.scala"}")
   }
 }
