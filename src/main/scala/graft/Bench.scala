@@ -43,7 +43,12 @@ import org.apache.spark.sql.SparkSession
   * its plan), and "layout_builds" (tag + seconds of every committed
   * layout BUILT during that query via [[LayoutLog]] — the post-`sbt test`
   * cold-rebuild cost of q75/q98/q101/q116 reads as layout cost on the
-  * first query to touch it, not as regression).
+  * first query to touch it, not as regression). "codegen_compiles" and
+  * "codegen_compiles_replays" count the generated classes each query's
+  * first run and its replays compiled ([[Engine.codegenCompiles]]): a warm
+  * replay should compile none, so one that does names its extra task CPU.
+  * "replays_failed" counts replays that threw (each also logged as
+  * `[bench] FAILED` on stderr); their timings are missing from the min.
   */
 object Bench {
 
@@ -186,6 +191,11 @@ object Bench {
     // the contention-attribution channel — see ShuffleBytesListener.
     val taskRunMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val taskCpuMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    // Generated classes compiled, first run and replays summed, and the
+    // replays that threw (see the object doc).
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val replayCompiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val replayFailed = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val layoutBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Double)]]
     // Streaming-engine startup per query (round-8 verdict #6): sum of
     // time-to-first-batch across the query's streaming runs — the
@@ -224,6 +234,7 @@ object Bench {
       val sb0 = shufListener.bytes.get()
       val tr0 = shufListener.runMs.get()
       val tc0 = shufListener.cpuMs.get()
+      val cc0 = Engine.codegenCompiles
       val t0 = System.nanoTime()
       val r =
         try {
@@ -242,6 +253,7 @@ object Bench {
       shufBytes(name) = shufListener.bytes.get() - sb0
       taskRunMs(name) = shufListener.runMs.get() - tr0
       taskCpuMs(name) = shufListener.cpuMs.get() - tc0
+      compiles(name) = Engine.codegenCompiles - cc0
       val lb = LayoutLog.drain()
       if (lb.nonEmpty) layoutBuilds(name) = lb
       val ss = StreamLog.drain()
@@ -251,7 +263,8 @@ object Bench {
       // bus is flushed afterwards so replay stragglers can't land inside
       // the NEXT query's shuffle window.
       r.foreach { case (_, cold) =>
-        val extra = (2 to reps).flatMap { _ =>
+        val rc0 = Engine.codegenCompiles
+        val extra = (2 to reps).flatMap { rep =>
           if ((System.nanoTime() - suiteT0) / 1e9 >= replayBudgetSec) {
             if (skippedFrom.isEmpty) skippedFrom = Some(name)
             None
@@ -260,8 +273,15 @@ object Bench {
               val s0 = System.nanoTime()
               fn(spark, sfDir).count()
               Some((System.nanoTime() - s0) / 1e9)
-            } catch { case _: Throwable => None }
+            } catch {
+              case t: Throwable =>
+                replayFailed(name) = replayFailed.getOrElse(name, 0) + 1
+                System.err.println(
+                  s"[bench] FAILED $name rep $rep: ${t.getClass.getName}: ${t.getMessage}")
+                None
+            }
         }
+        replayCompiles(name) = Engine.codegenCompiles - rc0
         drainListeners(spark)
         LayoutLog.drain(); StreamLog.drain()
         repTimes(name) = cold +: extra
@@ -272,32 +292,19 @@ object Bench {
     }
 
     val calPost = calibration(spark)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    // A JSON object of query name -> value.
+    def obj(kvs: Iterable[(String, Any)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val probesJson = probes
       .map { case (after, s) => s"""{"after_query":"$after","sec":$s}""" }
       .mkString("[", ",", "]")
-    val startMsJson = starts
-      .map { case (k, (ms, _)) => "\"" + k + "\":" + ms }.mkString("{", ",", "}")
-    val offsetJson = starts
-      .map { case (k, (_, off)) => "\"" + k + "\":" + off }.mkString("{", ",", "}")
-    val gcJson = gcMs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val shufJson = shufBytes.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val runMsJson = taskRunMs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val cpuMsJson = taskCpuMs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val layoutJson = layoutBuilds.map { case (k, bs) =>
-      "\"" + k + "\":" + bs.map { case (tag, s) => s"""{"tag":"$tag","sec":$s}""" }
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val streamJson = streamStartup
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val layoutJson = obj(layoutBuilds.map { case (k, bs) =>
+      k -> bs.map { case (tag, s) => s"""{"tag":"$tag","sec":$s}""" }.mkString("[", ",", "]")
+    })
     // Dispersion channel: min + lower-median over all reps of each query.
-    val minJson = repTimes
-      .map { case (k, ts) => "\"" + k + "\":" + ts.min }.mkString("{", ",", "}")
-    val medJson = repTimes
-      .map { case (k, ts) => "\"" + k + "\":" + ts.sorted.apply((ts.size - 1) / 2) }
-      .mkString("{", ",", "}")
+    val minJson = obj(repTimes.map { case (k, ts) => k -> ts.min })
+    val medJson = obj(repTimes.map { case (k, ts) => k -> ts.sorted.apply((ts.size - 1) / 2) })
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Cross-round HEADLINE (round-11 verdict #2): the sum of per-query
     // minima — the host-noise floor. Cold totals ranged 394–650 s across
@@ -308,14 +315,17 @@ object Bench {
     val minSum = if (repTimes.nonEmpty) repTimes.values.map(_.min).sum else 0.0
     val skipJson = skippedFrom.map("\"" + _ + "\"").getOrElse("null")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},"failed":$failedJson,""" +
         s""""bench_reps":$reps,"min_sum_sec":$minSum,"queries_min":$minJson,"queries_med":$medJson,""" +
         s""""dispersion_skipped_from":$skipJson,""" +
         s""""calibration_pre_sec":$calPre,"calibration_post_sec":$calPost,""" +
-        s""""calibration_probes":$probesJson,"query_start_ms":$startMsJson,""" +
-        s""""query_offset_sec":$offsetJson,"gc_ms":$gcJson,"shuffle_bytes":$shufJson,""" +
-        s""""task_run_ms":$runMsJson,"task_cpu_ms":$cpuMsJson,""" +
-        s""""layout_builds":$layoutJson,"stream_startup_sec":$streamJson,"sf":"$sfDir"}"""
+        s""""calibration_probes":$probesJson,"query_start_ms":${obj(starts.map { case (k, v) => k -> v._1 })},""" +
+        s""""query_offset_sec":${obj(starts.map { case (k, v) => k -> v._2 })},""" +
+        s""""gc_ms":${obj(gcMs)},"shuffle_bytes":${obj(shufBytes)},""" +
+        s""""task_run_ms":${obj(taskRunMs)},"task_cpu_ms":${obj(taskCpuMs)},""" +
+        s""""codegen_compiles":${obj(compiles)},"codegen_compiles_replays":${obj(replayCompiles)},""" +
+        s""""replays_failed":${obj(replayFailed)},""" +
+        s""""layout_builds":$layoutJson,"stream_startup_sec":${obj(streamStartup)},"sf":"$sfDir"}"""
     // Compact stdout line (round-13 verdict #2): the full line above grew
     // to ~90 KB (320 queries × eight attribution channels) and outran the
     // driver's stdout tail capture — BENCH_r12/r13 have parsed=null and
@@ -328,10 +338,8 @@ object Bench {
     // rep structure, warmup and the timed region are untouched.
     def ms3(v: Double): String = // Locale.ROOT: a comma-decimal default locale would break the JSON
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qsC = results.map { case (k, v) => "\"" + k + "\":" + ms3(v) }
-      .mkString("{", ",", "}")
-    val minC = repTimes
-      .map { case (k, ts) => "\"" + k + "\":" + ms3(ts.min) }.mkString("{", ",", "}")
+    val qsC = obj(results.map { case (k, v) => k -> ms3(v) })
+    val minC = obj(repTimes.map { case (k, ts) => k -> ms3(ts.min) })
     val compact =
       s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qsC,""" +
         s""""failed":$failedJson,"bench_reps":$reps,"min_sum_sec":${ms3(minSum)},""" +

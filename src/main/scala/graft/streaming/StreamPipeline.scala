@@ -88,7 +88,10 @@ object StreamPipeline {
       val writes = Routes.map { case (k, name) =>
         SQLExecution.withThreadLocalCaptured(session, routeWritePool) {
           routed.filter(col("route") === k).drop("route")
-            .withColumn("batch_id", lit(batchId))
+            // A string literal is a reference in generated code, where a
+            // long would be inlined and recompiled for every batch id; the
+            // directory name (`batch_id=N`) and its inferred type are the same.
+            .withColumn("batch_id", lit(batchId.toString))
             .write
             .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -10,7 +10,10 @@ package graft.tools
   * Per run it also prints the per-query stage breakdown (stage id, name,
   * wall ms, task count) from a stage listener, so "where does the time
   * go" is answered empirically (guide §1.1) instead of from the plan
-  * alone.
+  * alone. Each TOTAL line and the per-query summary also carry the
+  * generated classes the run compiled ([[graft.Engine.codegenCompiles]]):
+  * a warm rep should compile none, so one that recompiles shows it here
+  * next to its task CPU.
   *
   * Usage: runMain graft.tools.QProbe <sfDir> <plansDirOrNONE> <suffix> q1 q2 ...
   * (suffix e.g. "before"/"after"; NONE skips plan files.) Cores:
@@ -77,11 +80,13 @@ object QProbe {
         java.nio.file.Files.createDirectories(p.getParent)
         java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
       }
-      val times = (1 to reps).map { rep =>
+      val (times, compiles) = (1 to reps).map { rep =>
         stages.clear()
+        val c0 = graft.Engine.codegenCompiles
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val s = (System.nanoTime() - t0) / 1e9
+        val n = graft.Engine.codegenCompiles - c0
         if (rep == 1 || rep == reps) {
           val tag = if (rep == 1) "cold" else "rep" + rep
           import scala.jdk.CollectionConverters._
@@ -90,11 +95,12 @@ object QProbe {
           top.foreach { case (id, n, w, t, run, cpu) =>
             println(f"[qprobe]   $name $tag stage=$id%5d wall=${w}%6d ms tasks=$t%4d run=${run}%7d cpu=${cpu}%7d  $n")
           }
-          println(f"[qprobe]   $name $tag TOTAL stages=${all.size} wall=${all.map(_._3).sum}%7d run=${all.map(_._5).sum}%7d cpu=${all.map(_._6).sum}%7d")
+          println(f"[qprobe]   $name $tag TOTAL stages=${all.size} wall=${all.map(_._3).sum}%7d run=${all.map(_._5).sum}%7d cpu=${all.map(_._6).sum}%7d compiles=$n")
         }
-        s
-      }
-      println(f"[qprobe] $name reps=${times.map(t => f"$t%.3f").mkString(",")} min=${times.min}%.3f")
+        (s, n)
+      }.unzip
+      println(f"[qprobe] $name reps=${times.map(t => f"$t%.3f").mkString(",")} " +
+        f"min=${times.min}%.3f compiles=${compiles.mkString(",")}")
     }
     spark.stop()
   }
