@@ -80,12 +80,74 @@ object Engine {
 /** Loaders for the harness's parquet star schema (TESTDATA.md). Each table is
   * one parquet directory under the scale-factor dir. Column pruning and
   * predicate pushdown reach the scan because these return raw relations —
-  * callers compose select/filter lazily. */
+  * callers compose select/filter lazily.
+  *
+  * Table schemas resolve once per session. Spark's parquet schema
+  * inference runs one job per `spark.read.parquet` (about 100 ms on a
+  * warm 4-core local session, more than many warm queries' own work), so
+  * [[load]] infers a table's schema once, memoizes it in [[SessionMemo]],
+  * and reads with `spark.read.schema(schema)`, which runs no job. The memo key
+  * is the path, a fingerprint of the names, sizes and modification times
+  * of the files under it (one driver-side stat through the path's Hadoop
+  * FileSystem per call; no job, no forked process), and the session confs
+  * that change what inference returns. So a table rewritten in place
+  * mid-session resolves again, and its rows are always listed afresh by
+  * the read itself. Scope: the memo is per session, so every session made
+  * with `newSession()` resolves each table once more. */
 object Tables {
+  import org.apache.hadoop.fs.{FileStatus, Path}
   import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+  import org.apache.spark.sql.types.StructType
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Session confs that change what parquet schema inference returns, and
+    * so belong in the key of a resolved schema. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  /** The schema parquet inference returns for `path`, inferred once per
+    * (session, file fingerprint, inference confs). A path that does not
+    * exist is not memoized: its read throws Spark's own
+    * `AnalysisException`, and so does a failed inference. */
+  private def schemaOf(spark: SparkSession, path: String): StructType =
+    fingerprint(spark, path) match {
+      case Some(files) =>
+        val confs = InferenceConfs.map(spark.conf.getOption(_).orNull).mkString(",")
+        SessionMemo.memo(spark, s"tableSchema|$path|$files|$confs") {
+          spark.read.parquet(path).schema
+        }
+      case None => spark.read.parquet(path).schema
+    }
+
+  /** MD5 of the (path, size, modification time) of every file under
+    * `path` (the IvfPqIndex staleness idiom), or None when `path` does
+    * not exist as written (missing, or a glob). Statuses come from
+    * `listStatus`/`getFileStatus`, which read no permissions, so the local
+    * file system forks no process. */
+  private def fingerprint(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files) else Seq(st)
+    try {
+      val listing = files(fs.getFileStatus(p))
+        .map(st => s"${st.getPath}|${st.getLen}|${st.getModificationTime}").sorted.mkString("\n")
+      Some(java.security.MessageDigest.getInstance("MD5")
+        .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Widen a scan-rooted frame to the session's shuffle width for
     * CPU-shaped map stages (r13 optimization, guide §2.5/§6 parallelism
@@ -154,12 +216,18 @@ object Tables {
     normalizeTs(load(s, d, "events"))
   }
 
+  /** The events table's file schema (`ts` still in its file encoding), from
+    * the same resolved entry that [[events]] reads with. */
+  private[graft] def eventsSchema(s: SparkSession, d: String): StructType = {
+    nanosAsLong(s)
+    schemaOf(s, s"$d/events.parquet")
+  }
+
   /** Streaming view of the events table (file source). Same nano→micro
     * conversion, applied on the incremental plan. */
   def eventsStream(s: SparkSession, d: String): DataFrame = {
-    nanosAsLong(s)
     val path = s"$d/events.parquet"
-    val schema = s.read.parquet(path).schema
+    val schema = eventsSchema(s, d)
     // The file stream source requires a directory; the harness table is a
     // single file. Stage a symlink dir (no data copy).
     val linkDir = SessionMemo.workDir(s, "graft_stream_src")

@@ -19,13 +19,15 @@ import org.apache.spark.storage.StorageLevel
   * paths) keep the full weak-key semantics. `workDir` directories live
   * until the SparkContext stops, which deletes them.
   *
-  * Staleness caveat: entries keyed on a data directory have no
-  * invalidation; rewriting the data under the same dir mid-session
-  * silently returns the old frames. That is acceptable for the harness
-  * (testdata is immutable per run and every bench/verify process is a
-  * fresh JVM); a deployment that rewrites inputs in place must open a
-  * new session per dataset version, or key the memo on a dataset
-  * fingerprint (file mtime/size) instead of the bare dir. */
+  * Staleness caveat: table reads see in-place rewrites (`Tables` keys
+  * its resolved schemas on a fingerprint of the table's files, and every
+  * read lists the files afresh), but entries keyed on a bare data
+  * directory have no invalidation: rewriting the data under the same dir
+  * mid-session silently returns the old derived frames. That is
+  * acceptable for the harness (testdata is immutable per run and every
+  * bench/verify process is a fresh JVM); a deployment that rewrites
+  * inputs in place must open a new session per dataset version, or key
+  * those entries on a dataset fingerprint instead of the bare dir. */
 private[graft] object SessionMemo {
   private val maps = new java.util.WeakHashMap[
     SparkSession, scala.collection.concurrent.TrieMap[String, Any]]()

@@ -378,7 +378,7 @@ object Queries {
       Files.copy(part.toPath, stage.resolve("sentinel.parquet"))
       stage
     }
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.eventsSchema(spark, dir)
     val ev = Tables.normalizeTs(
       s.readStream.schema(schema).parquet(stage.toString))
     val sessions = graft.streaming.StreamPipeline.sessionizeTws(

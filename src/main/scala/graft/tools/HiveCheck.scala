@@ -46,7 +46,7 @@ object HiveCheck {
         s"""CREATE EXTERNAL TABLE lineitem_ext
            |USING parquet LOCATION '$sfDir/lineitem.parquet'""".stripMargin)
       val extCount = spark.sql("SELECT COUNT(*) FROM lineitem_ext").head().getLong(0)
-      val directCount = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      val directCount = graft.Tables.lineitem(spark, sfDir).count()
       require(extCount == directCount && extCount > 0,
         s"external table count $extCount != direct $directCount")
       println(s"[hivecheck] external table through HiveExternalCatalog: $extCount rows OK")

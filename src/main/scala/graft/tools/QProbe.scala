@@ -13,7 +13,10 @@ package graft.tools
   * alone. Each TOTAL line and the per-query summary also carry the
   * generated classes the run compiled ([[graft.Engine.codegenCompiles]]):
   * a warm rep should compile none, so one that recompiles shows it here
-  * next to its task CPU.
+  * next to its task CPU. Construction (the `fn(spark, dir)` call) is timed
+  * apart from the write, with the Spark jobs it started (`construct=` ms
+  * and `construct_jobs=`): a warm rep should start none, so an eager job
+  * at construction shows up without a traced bench run.
   *
   * Usage: runMain graft.tools.QProbe <sfDir> <plansDirOrNONE> <suffix> q1 q2 ...
   * (suffix e.g. "before"/"after"; NONE skips plan files.) Cores:
@@ -51,8 +54,15 @@ object QProbe {
     // task cpu ms) — run/cpu from the stage's aggregated TaskMetrics, so
     // a stage whose aggregate task time dwarfs its wall (duplicate
     // lineage execution, lock serialization) is attributable per stage.
+    // Job listener: the group of each started job (construction runs in a
+    // group of its own).
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Int, Long, Long)]
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val sc = spark.sparkContext
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobGroups.add)
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val i = sc.stageInfo
@@ -80,27 +90,38 @@ object QProbe {
         java.nio.file.Files.createDirectories(p.getParent)
         java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
       }
-      val (times, compiles) = (1 to reps).map { rep =>
+      val runs = (1 to reps).map { rep =>
         stages.clear()
+        jobGroups.clear()
+        val group = s"graft-qprobe-construct-${java.util.UUID.randomUUID()}"
         val c0 = graft.Engine.codegenCompiles
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        sc.setJobGroup(group, "construct")
+        val df = try fn(spark, sfDir) finally sc.clearJobGroup()
+        val t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
         val s = (System.nanoTime() - t0) / 1e9
         val n = graft.Engine.codegenCompiles - c0
+        val constructMs = (t1 - t0) / 1e6
+        org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+        import scala.jdk.CollectionConverters._
+        val constructJobs = jobGroups.asScala.count(_ == group)
         if (rep == 1 || rep == reps) {
           val tag = if (rep == 1) "cold" else "rep" + rep
-          import scala.jdk.CollectionConverters._
           val all = stages.asScala.toSeq
           val top = all.sortBy(s => -(s._3 max s._5)).take(14)
           top.foreach { case (id, n, w, t, run, cpu) =>
             println(f"[qprobe]   $name $tag stage=$id%5d wall=${w}%6d ms tasks=$t%4d run=${run}%7d cpu=${cpu}%7d  $n")
           }
-          println(f"[qprobe]   $name $tag TOTAL stages=${all.size} wall=${all.map(_._3).sum}%7d run=${all.map(_._5).sum}%7d cpu=${all.map(_._6).sum}%7d compiles=$n")
+          println(f"[qprobe]   $name $tag TOTAL stages=${all.size} wall=${all.map(_._3).sum}%7d run=${all.map(_._5).sum}%7d cpu=${all.map(_._6).sum}%7d " +
+            f"construct=$constructMs%.1f construct_jobs=$constructJobs compiles=$n")
         }
-        (s, n)
-      }.unzip
+        (s, constructMs, constructJobs, n)
+      }
+      val times = runs.map(_._1)
       println(f"[qprobe] $name reps=${times.map(t => f"$t%.3f").mkString(",")} " +
-        f"min=${times.min}%.3f compiles=${compiles.mkString(",")}")
+        f"min=${times.min}%.3f construct=${runs.map(r => f"${r._2}%.1f").mkString(",")} " +
+        f"construct_jobs=${runs.map(_._3).mkString(",")} compiles=${runs.map(_._4).mkString(",")}")
     }
     spark.stop()
   }

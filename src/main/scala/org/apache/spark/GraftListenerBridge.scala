@@ -1,8 +1,9 @@
 /* Lives in Spark's package on purpose: LiveListenerBus.waitUntilEmpty is
  * private[spark], but task metrics arrive on the bus asynchronously after
  * an action returns, so a tally read at a query boundary needs a
- * deterministic flush first. Used by Bench's per-query deltas, SpillCheck
- * and SpillSpec; same rationale as GraftColumnBridge. */
+ * deterministic flush first. Used by Bench's per-query deltas, QProbe's
+ * construction job counts, SpillCheck and SpillSpec; same rationale as
+ * GraftColumnBridge. */
 package org.apache.spark
 
 object GraftListenerBridge {

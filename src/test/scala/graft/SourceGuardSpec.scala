@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * persist a frame by hand and keep it (a scoped persist that the body
   * releases again is fine; a frame that outlives the body is
   * `SessionMemo.frame`'s job). Also keeps one parser of the session's
-  * shuffle width. */
+  * shuffle width, and every harness table read behind `Tables`' schema
+  * catalog. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -63,6 +64,11 @@ class SourceGuardSpec extends AnyFunSuite {
   test("java.io.tmpdir appears in no main source") {
     val found = filesMatching("""java\.io\.tmpdir""")
     assert(found.isEmpty, s"use SessionMemo.workDir in: $found")
+  }
+
+  test("a harness table path is read only in Engine") {
+    val found = filesMatching("""\.parquet\(\s*s"\$\{?(?:dir|sfDir)\}?/\w+\.parquet"""")
+    assert(found.subsetOf(Set("Engine.scala")), s"read through Tables in: ${found - "Engine.scala"}")
   }
 
   test("spark.sql.shuffle.partitions is parsed only by Tables.shuffleWidth in Engine") {
