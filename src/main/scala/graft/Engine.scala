@@ -55,6 +55,7 @@ object Engine {
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -73,8 +74,44 @@ object Engine {
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
+
+  /** The narrow child session of `spark` that graft's streaming queries
+    * and ingest replays run on: one per (parent, `rocksDbState`), made
+    * through [[SessionMemo]] on first use with every conf below, and never
+    * changed after. So its resolved table schemas carry over from one
+    * construction to the next, and no query mutates a session's confs.
+    *  - Shuffle width 4: a streaming aggregation opens one state store per
+    *    shuffle partition, so the parent's batch-sized width multiplies
+    *    pure startup cost. A fresh checkpoint adopts the width at its first
+    *    run, as a deployment sizes it to state volume.
+    *  - AQE off: the ingest replays are many tiny sequential exchanges
+    *    (q200 about 15 per batch), and AQE's per-stage re-planning turns
+    *    each into its own job round-trip; static planning ran q200's
+    *    four-batch replay about 2× faster.
+    *  - `nanosAsLong`, which [[Tables.events]] needs.
+    *  - With `rocksDbState`, the RocksDB state-store provider, for the
+    *    queries with per-key state. The others keep Spark's default: the
+    *    stream-stream interval join (q66) ran slower under RocksDB.
+    *
+    * A memory-sink name can run again on the same child: the frame an
+    * earlier run returned keeps its own rows, and the child's temp view
+    * holds the latest run's rows until the next run. The same query must
+    * not run concurrently on the same parent: both runs would share one
+    * child and one sink name. */
+  def narrowSession(spark: SparkSession, rocksDbState: Boolean = false): SparkSession =
+    SessionMemo.memo(spark, s"narrowSession|$rocksDbState") {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", "4")
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      if (rocksDbState)
+        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      s
+    }
 }
 
 /** Loaders for the harness's parquet star schema (TESTDATA.md). Each table is
@@ -92,8 +129,10 @@ object Engine {
   * FileSystem per call; no job, no forked process), and the session confs
   * that change what inference returns. So a table rewritten in place
   * mid-session resolves again, and its rows are always listed afresh by
-  * the read itself. Scope: the memo is per session, so every session made
-  * with `newSession()` resolves each table once more. */
+  * the read itself. Scope: the memo is per session. An
+  * [[Engine.narrowSession]] is made once per parent, so it resolves each
+  * table once per parent too; any other `newSession()` child resolves
+  * each table once more. */
 object Tables {
   import org.apache.hadoop.fs.{FileStatus, Path}
   import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
@@ -179,7 +218,11 @@ object Tables {
     * which Spark's reader rejects; current drops write TIMESTAMP(MICROS,
     * isAdjustedToUTC=false), which Spark reads as TIMESTAMP_NTZ. Keep the
     * legacy conf on (it is a no-op for micros files) and normalize either
-    * encoding to a plain TIMESTAMP instant below. */
+    * encoding to a plain TIMESTAMP instant below. Graft's own sessions
+    * ([[Engine.session]], [[Engine.tune]], [[Engine.narrowSession]]) set
+    * it from the start; on another session the first events read sets it
+    * here, and since the conf is part of every resolved schema's key,
+    * tables resolved before that read resolve once more. */
   private def nanosAsLong(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

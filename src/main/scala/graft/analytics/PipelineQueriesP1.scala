@@ -1365,9 +1365,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
     * segments·(days·types) METADATA-sized rows. */
   def incrementalRollup(spark: SparkSession, dir: String): DataFrame = {
     graft.SessionMemo.memo(spark, s"q124|$dir") {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      val s = graft.Engine.narrowSession(spark)
       val work = graft.SessionMemo.workDir(spark, "graft_rollup")
       val rollup = s"$work/rollup"
       val staged = work.resolve("incoming")
@@ -1488,23 +1486,16 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
       .schema(s.read.parquet(staged).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
-    val t0 = System.currentTimeMillis()
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("value_cents"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(rollup)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    graft.StreamLog.await(t0, q)
+    graft.streaming.StreamPipeline.runEachBatch(stream, checkpoint) { (batch, batchId) =>
+      batch
+        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("value_cents"))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(rollup)
+    }
   }
 
   /** Drift-histogram bucket count (q123), shared with the oracle SQL. */
@@ -2242,8 +2233,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
     * are StreamingSpec territory (batch order isn't oracle-portable). */
   def streamingIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     graft.SessionMemo.memo(spark, s"q100|$dir") {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val s = graft.Engine.narrowSession(spark)
       val work = graft.SessionMemo.workDir(spark, "graft_ingest_dedup").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(s, dir)
@@ -2254,12 +2244,9 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
           TextAnalysis.tokenSetKey(col("text")).as("fp"), lit(-1L).as("batch_id"))
         .write.partitionBy("batch_id").parquet(corpus)
       val staged = s"$work/incoming"
-      docs.filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"))
-        .write.parquet(staged)
-      val stream = s.readStream
-        .schema(s.read.parquet(staged).schema)
-        .parquet(staged)
+      val incoming = ingestDedupIncoming(docs)
+      incoming.write.parquet(staged)
+      val stream = s.readStream.schema(incoming.schema).parquet(staged)
       val t0 = System.currentTimeMillis()
       val q = graft.dedup.IncrementalDedup.streamingIngest(
         stream, corpus, "doc_id",
@@ -2272,6 +2259,11 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
         .orderBy(col("doc_id"))
     }
   }
+
+  /** q100's incoming docs, staged as parquet and streamed back with this
+    * frame's schema. */
+  private[graft] def ingestDedupIncoming(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 3 === 0).select(col("doc_id"), col("text"))
 
   /** Heavy hitters via count-min sketch, surfaced as the q42-style BOUNDED
     * claim: the top-k exact token counts (the audit twin) next to the CMS

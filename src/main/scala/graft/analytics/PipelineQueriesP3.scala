@@ -516,14 +516,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     * returns the work corpus dir. */
   private[analytics] def fuzzyIngestCorpus(spark: SparkSession, dir: String): String =
     graft.SessionMemo.memo(spark, s"q200corpus|$dir") {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // The ingest path is ~15 tiny sequential exchanges per batch; AQE's
-      // per-stage re-planning turns each into its own job round-trip and
-      // dominates wall-clock at this batch size. Static planning for the
-      // ingest session only (the frames are KB-sized; nothing AQE would
-      // fix), ~2× on the four-batch run.
-      s.conf.set("spark.sql.adaptive.enabled", "false")
+      val s = graft.Engine.narrowSession(spark)
       val work = graft.SessionMemo.workDir(spark, "graft_fuzzy_ingest").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(s, dir)
@@ -2034,8 +2027,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     * (session, dir) like q200. */
   def committedSemDedupAdmission(spark: SparkSession, dir: String): DataFrame = {
     graft.SessionMemo.memo(spark, s"q254|$dir") {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val s = graft.Engine.narrowSession(spark)
       val work = graft.SessionMemo.workDir(spark, "graft_admit_store").toString
       graft.similarity.SemDedup.committedAdmission(
         s, Tables.embeddings(s, dir), "vec_id", "embedding", s"$work/admitted")

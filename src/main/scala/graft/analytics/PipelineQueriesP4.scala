@@ -347,11 +347,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     * (RocksDB-backed); the shuffle is the user_id Exchange the state
     * store already requires; the sink carries examples, not events. */
   def streamBehaviorExamples(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = graft.Engine.narrowSession(spark, rocksDbState = true)
     val examples = graft.streaming.StreamPipeline
       .behaviorExamples(s, Tables.eventsStream(s, dir), BehaviorCtxLen)
     behaviorCardOf(graft.streaming.StreamPipeline
@@ -1276,8 +1272,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     * log appends per batch. */
   def streamBoilerGate(spark: SparkSession, dir: String): DataFrame =
     graft.SessionMemo.memo(spark, s"q282|$dir") {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val s = graft.Engine.narrowSession(spark)
       val work = graft.SessionMemo.workDir(spark, "graft_boiler_gate").toString
       val corpus = s"$work/corpus"
       val docs = Tables.documents(s, dir)
@@ -1295,24 +1290,14 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         .filter(col("df") >= BoilerMinDocs)
         .select(col("segh"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // Incoming: short heads of mod-5 docs; half carry the banner.
       val staged = s"$work/incoming"
-      val toks = split(col("text"), " ")
-      docs.filter(col("doc_id") % 5 === 0 && size(toks) >= 20)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("source"),
-          when(col("doc_id") % 10 === 0,
-            concat(lit(banner), array_join(expr("slice(split(text, ' '), 1, 10)"), " ")))
-            .otherwise(array_join(expr("slice(split(text, ' '), 1, 15)"), " "))
-            .as("text"))
-        .write.parquet(staged)
+      val incoming = boilerGateIncoming(docs, banner)
+      incoming.write.parquet(staged)
       val decisions = s"$work/decisions"
-      val t0 = System.currentTimeMillis()
-      val q = s.readStream.schema(s.read.parquet(staged).schema).parquet(staged)
-        .writeStream
-        .option("checkpointLocation", s"$work/_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val scored = docSegments(batch)
+      graft.streaming.StreamPipeline.runEachBatch(
+          s.readStream.schema(incoming.schema).parquet(staged), s"$work/_checkpoint") {
+        (batch, batchId) =>
+          docSegments(batch)
             .join(broadcast(boilerKeys.withColumn("is_b", lit(1L))), Seq("segh"), "left")
             .groupBy(col("doc_id"), col("source"))
             .agg(count(lit(1)).as("n_segments"),
@@ -1320,18 +1305,25 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
             .select(col("doc_id"), col("source"), col("n_segments"), col("n_boiler"),
               expr("n_boiler * 10000L div n_segments").as("boiler_bp"))
             .withColumn("admitted", col("boiler_bp") < BoilerGateBp)
-          scored.withColumn("batch_id", lit(batchId))
+            .withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(decisions)
-          ()
-        }
-        .start()
-      graft.StreamLog.await(t0, q)
+      }
       boilerKeys.unpersist(blocking = false)
       spark.read.parquet(decisions)
         .select(col("doc_id"), col("source"), col("n_segments"), col("n_boiler"),
           col("boiler_bp"), col("admitted"))
         .orderBy(col("doc_id"))
     }
+
+  /** q282's incoming batch: short heads of mod-5 docs with fresh ids,
+    * half of them carrying `banner`. */
+  private[graft] def boilerGateIncoming(docs: DataFrame, banner: String): DataFrame =
+    docs.filter(col("doc_id") % 5 === 0 && size(split(col("text"), " ")) >= 20)
+      .select((col("doc_id") + 3000000L).as("doc_id"), col("source"),
+        when(col("doc_id") % 10 === 0,
+          concat(lit(banner), array_join(expr("slice(split(text, ' '), 1, 10)"), " ")))
+          .otherwise(array_join(expr("slice(split(text, ' '), 1, 15)"), " "))
+          .as("text"))
 
   /** q283 selection quota divisor (keep the top 1/N of the corpus by
     * fused rank), shared with the oracle. */
@@ -1724,35 +1716,31 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     * store. */
   def streamTrender(spark: SparkSession, dir: String): DataFrame =
     graft.SessionMemo.memo(spark, s"q293|$dir") {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val s = graft.Engine.narrowSession(spark)
       val work = graft.SessionMemo.workDir(spark, "graft_stream_trender").toString
       val staged = s"$work/incoming"
-      Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .repartition(4, pmod(col("event_id"), lit(4L)))
-        .write.parquet(staged)
+      val incoming = trenderIncoming(Tables.events(s, dir))
+      incoming.write.parquet(staged)
       val store = s"$work/partials"
-      val t0 = System.currentTimeMillis()
-      val q = s.readStream.schema(s.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .writeStream
-        .option("checkpointLocation", s"$work/_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch
-            .groupBy(col("user_id"),
-              expr("unix_micros(ts) div 3600000000L").as("hour_id"))
-            .agg(count(lit(1)).as("n"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(store)
-          ()
-        }
-        .start()
-      graft.StreamLog.await(t0, q)
+      graft.streaming.StreamPipeline.runEachBatch(
+          s.readStream.schema(incoming.schema).option("maxFilesPerTrigger", "1").parquet(staged),
+          s"$work/_checkpoint") { (batch, batchId) =>
+        batch
+          .groupBy(col("user_id"),
+            expr("unix_micros(ts) div 3600000000L").as("hour_id"))
+          .agg(count(lit(1)).as("n"))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(store)
+      }
       decayedFold(spark.read.parquet(store)
         .groupBy(col("user_id"), col("hour_id")).agg(sum(col("n")).as("n")))
     }
+
+  /** q293's event feed: four files of (event_id, ts, user_id), one per
+    * micro-batch. */
+  private[graft] def trenderIncoming(events: DataFrame): DataFrame =
+    events.select(col("event_id"), col("ts"), col("user_id"))
+      .repartition(4, pmod(col("event_id"), lit(4L)))
 
   /** q288 worker count, shared with the oracle. */
   private[graft] val LptWorkers = 4
@@ -2891,40 +2879,35 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
     * build, never per batch. */
   def streamPerplexityGate(spark: SparkSession, dir: String): DataFrame =
     graft.SessionMemo.memo(spark, s"q307|$dir") {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val s = graft.Engine.narrowSession(spark)
       val work = graft.SessionMemo.workDir(spark, "graft_ppl_gate").toString
       val docs = Tables.documents(s, dir)
       val (model, ctx) = pplModel(docs)
-      // Incoming: 12-token heads of mod-6 docs (≥13 tokens), fresh ids —
-      // the q282 derived-batch shape, scored against the frozen LM.
       val staged = s"$work/incoming"
-      docs.filter(col("doc_id") % 6 === 0
-          && size(split(col("text"), " ")) >= 13)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("source"),
-          col("lang"),
-          array_join(expr("slice(split(text, ' '), 1, 12)"), " ").as("text"))
-        .write.parquet(staged)
+      val incoming = pplGateIncoming(docs)
+      incoming.write.parquet(staged)
       val decisions = s"$work/decisions"
-      val t0 = System.currentTimeMillis()
-      val q = s.readStream.schema(s.read.parquet(staged).schema).parquet(staged)
-        .writeStream
-        .option("checkpointLocation", s"$work/_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      graft.streaming.StreamPipeline.runEachBatch(
+          s.readStream.schema(incoming.schema).parquet(staged), s"$work/_checkpoint") {
+        (batch, batchId) =>
           pplScore(batch, model, ctx)
             .withColumn("admitted", col("avg_q8") <= PplKeepMaxQ8)
             .withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(decisions)
-          ()
-        }
-        .start()
-      graft.StreamLog.await(t0, q)
+      }
       spark.read.parquet(decisions)
         .select(col("doc_id"), col("source"), col("nbg"), col("s_sum"),
           col("avg_q8"), col("admitted"))
         .orderBy(col("doc_id"))
     }
+
+  /** q307's incoming batch: 12-token heads of mod-6 docs (≥13 tokens)
+    * with fresh ids, the q282 derived-batch shape, scored against the
+    * frozen LM. */
+  private[graft] def pplGateIncoming(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 6 === 0 && size(split(col("text"), " ")) >= 13)
+      .select((col("doc_id") + 3000000L).as("doc_id"), col("source"), col("lang"),
+        array_join(expr("slice(split(text, ' '), 1, 12)"), " ").as("text"))
 
   /** q308 constants, shared with the oracle: the Stupid Backoff penalty
     * (−log₂ 0.4 in Q8.8 ≈ 338) and the trigram context bucket count

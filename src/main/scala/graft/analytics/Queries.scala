@@ -3,7 +3,6 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
@@ -307,32 +306,17 @@ object Queries {
   /** Streaming twin of tumblingHourly: file stream → windowed count →
     * AvailableNow trigger → memory sink. Proves the same plan runs
     * incrementally with streaming semantics and matches the batch oracle.
-    *
-    * Runs on a DEDICATED child session with a narrow shuffle width: a
-    * streaming aggregation instantiates one state-store per shuffle
-    * partition, so session width (sized for the batch scans) multiplies
-    * pure startup cost here — and a child session is the thread-safe way
-    * to scope that choice (no session-global conf mutation). A fresh
-    * checkpoint adopts the width at first run; real deployments size it
-    * to state volume the same way. */
+    * Runs on the parent's [[graft.Engine.narrowSession]]. */
   def streamHourly(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    val s = graft.Engine.narrowSession(spark)
     val counts = Tables
       .eventsStream(s, dir)
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("hour_start"), col("n"))
-    val sinkName = "graft_stream_hourly"
-    val t0 = System.currentTimeMillis()
-    val q = counts.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.StreamLog.await(t0, q)
-    s.table(sinkName).orderBy(col("hour_start"))
+    graft.streaming.StreamPipeline
+      .runToMemory(s, counts, "graft_stream_hourly", "complete")
+      .orderBy(col("hour_start"))
   }
 
   /** Streaming twin of q23's sessionization on the Spark-4
@@ -346,14 +330,10 @@ object Queries {
     * final watermark passes, so the stage dir carries the events file
     * plus ONE far-future sentinel row (user_id = -1, ts = 2100-01-01):
     * the sentinel drags the final watermark past every real session's
-    * last+gap and is filtered from the output. Child session scopes the
-    * narrow shuffle width + RocksDB provider (same pattern as q24). */
+    * last+gap and is filtered from the output. Runs on the parent's
+    * RocksDB-backed [[graft.Engine.narrowSession]]. */
   def streamSessions(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = graft.Engine.narrowSession(spark, rocksDbState = true)
     import java.nio.file.{Files, Paths}
     // Staged once per parent session: the link, plus a sentinel written in
     // the SAME ts encoding as the source files (epoch-nanos long for
@@ -406,11 +386,7 @@ object Queries {
     * like q63); the shuffle is the same user_id Exchange; the sink
     * carries edges, not events. */
   def streamTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = graft.Engine.narrowSession(spark, rocksDbState = true)
     val pairs = graft.streaming.StreamPipeline
       .transitionPairs(s, Tables.eventsStream(s, dir))
     PipelineQueries.transitionMatrixOf(
@@ -468,11 +444,7 @@ object Queries {
     * last-writer-wins window over the full table: hash divergence reads
     * as "streaming state drifted from batch semantics". */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = graft.Engine.narrowSession(spark, rocksDbState = true)
     val latest = graft.streaming.StreamPipeline.upsertLatest(s, Tables.eventsStream(s, dir))
     upsertServingView(graft.streaming.StreamPipeline
       .runToMemory(s, latest.toDF(), "graft_stream_upsert"))
@@ -500,8 +472,7 @@ object Queries {
     * final watermark — only state GC does). Oracle = the same interval
     * join in SQL. */
   def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    val s = graft.Engine.narrowSession(spark)
     val p = Tables.eventsStream(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"))
@@ -525,8 +496,7 @@ object Queries {
     * (the oracle). At 100 TB/day the watermark bounds the state store —
     * the property StreamingSpec exercises with replayed late events. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    val s = graft.Engine.narrowSession(spark)
     val deduped = graft.streaming.StreamPipeline.dedupWithinWatermark(
       Tables.eventsStream(s, dir).select(col("user_id"), col("event_type"), col("ts")),
       keyCols = Seq("user_id", "event_type"), tsCol = "ts", watermark = "2 hours")

@@ -134,15 +134,10 @@ object Compaction {
 
     // 4. Publish: dynamic partition overwrite — only staged partitions
     // swap, atomically per partition.
-    val mode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      spark.read.parquet(stagingDir)
-        .write.partitionBy(partCol).mode("overwrite").parquet(table)
-    finally mode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    spark.read.parquet(stagingDir)
+      .write.partitionBy(partCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(table)
 
     val after = layoutStats(spark, table, partCol).map(s => s._1 -> s._2).toMap
     before

@@ -3,10 +3,10 @@ package graft.streaming
 import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException, ExecutorService, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.operators.{Filters, Parse}
 
@@ -499,14 +499,21 @@ object StreamPipeline {
     * for streaming plans. */
   def runToMemory(spark: SparkSession, stream: DataFrame, name: String,
       outputMode: String = "append"): DataFrame = {
-    val t0 = System.currentTimeMillis()
-    val q = stream.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.StreamLog.await(t0, q)
+    runBounded(stream.writeStream.format("memory").queryName(name).outputMode(outputMode))
     spark.table(name)
+  }
+
+  /** Run `stream` to completion against bounded input (AvailableNow),
+    * calling `f` with each micro-batch and its id; the query checkpoints
+    * under `checkpoint`, so a rerun resumes after its last committed
+    * batch. */
+  def runEachBatch(stream: DataFrame, checkpoint: String)(f: (DataFrame, Long) => Unit): Unit =
+    runBounded(stream.writeStream.option("checkpointLocation", checkpoint).foreachBatch(f))
+
+  /** Start `writer` with the AvailableNow trigger and block until it has
+    * drained its input, recording its startup in [[graft.StreamLog]]. */
+  private def runBounded(writer: DataStreamWriter[Row]): Unit = {
+    val t0 = System.currentTimeMillis()
+    graft.StreamLog.await(t0, writer.trigger(Trigger.AvailableNow()).start())
   }
 }

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * persist a frame by hand and keep it (a scoped persist that the body
   * releases again is fine; a frame that outlives the body is
   * `SessionMemo.frame`'s job). Also keeps one parser of the session's
-  * shuffle width, and every harness table read behind `Tables`' schema
-  * catalog. */
+  * shuffle width, every harness table read behind `Tables`' schema
+  * catalog, and every child session and session conf in `Engine`. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -74,5 +74,16 @@ class SourceGuardSpec extends AnyFunSuite {
   test("spark.sql.shuffle.partitions is parsed only by Tables.shuffleWidth in Engine") {
     val found = filesMatching("""conf\.get\("spark\.sql\.shuffle\.partitions"""")
     assert(found.subsetOf(Set("Engine.scala")), s"use Tables.shuffleWidth in: ${found - "Engine.scala"}")
+  }
+
+  test("newSession() appears only in Engine") {
+    val found = filesMatching("""newSession\(\)""")
+    assert(found.subsetOf(Set("Engine.scala")), s"use Engine.narrowSession in: ${found - "Engine.scala"}")
+  }
+
+  test("conf.set( appears only in Engine") {
+    val found = filesMatching("""conf\.set\(""")
+    assert(found.subsetOf(Set("Engine.scala")),
+      s"set session confs in Engine, or writer options at the write, in: ${found - "Engine.scala"}")
   }
 }

@@ -832,4 +832,20 @@ class StreamingSpec extends AnyFunSuite {
         .collect().toSet == Set(100L, 50L))
     }
   }
+
+  test("each staged stream input is read back with the schema of the frame written") {
+    import graft.analytics.PipelineQueries
+    val docs = Tables.documents(spark, TestSpark.SfDir)
+    val staged = Seq(
+      "q100" -> PipelineQueries.ingestDedupIncoming(docs),
+      "q282" -> PipelineQueries.boilerGateIncoming(docs, "promo sale banner click here "),
+      "q293" -> PipelineQueries.trenderIncoming(Tables.events(spark, TestSpark.SfDir)),
+      "q307" -> PipelineQueries.pplGateIncoming(docs))
+    TestSpark.withTempDir("graft_staged_schema") { dir =>
+      staged.foreach { case (q, frame) =>
+        frame.write.parquet(s"$dir/$q")
+        assert(frame.schema.toNullable == spark.read.parquet(s"$dir/$q").schema, q)
+      }
+    }
+  }
 }

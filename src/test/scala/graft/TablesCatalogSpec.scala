@@ -12,7 +12,6 @@ class TablesCatalogSpec extends AnyFunSuite {
   private val d = TestSpark.SfDir
 
   test("a resolved table is read again without a Spark job") {
-    // events first: it sets the nanos conf, which is part of every key.
     Tables.events(spark, d)
     Tables.documents(spark, d)
     val (docs, docJobs) = TestSpark.jobsStartedBy(Tables.documents(spark, d))
@@ -22,6 +21,15 @@ class TablesCatalogSpec extends AnyFunSuite {
     val inferred = spark.read.parquet(s"$d/documents.parquet")
     assert(docs.schema == inferred.schema)
     assert(docs.exceptAll(inferred).isEmpty && inferred.exceptAll(docs).isEmpty)
+  }
+
+  test("the first events read re-keys no table resolved before it") {
+    // A fresh child carries Engine.session's builder confs, nanosAsLong too.
+    val s = spark.newSession()
+    Tables.documents(s, d)
+    Tables.events(s, d)
+    val (_, jobs) = TestSpark.jobsStartedBy(Tables.documents(s, d))
+    assert(jobs == 0, s"Tables.documents resolved again after Tables.events: $jobs jobs")
   }
 
   test("checking a resolved table's files forks no process") {
